@@ -13,6 +13,12 @@ object PlanPhases {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSet
       else Set("q64_gopher_rules", "q71_zorder", "q53_balanced_mix")
+    val unknown = names -- SparkEntry.queries.keySet
+    if (unknown.nonEmpty) {
+      System.err.println(s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}; " +
+        s"valid queries: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

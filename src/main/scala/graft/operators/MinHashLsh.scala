@@ -81,19 +81,21 @@ object MinHashLsh {
       .select(col("id"), col("band_idx").cast("long").as("band_idx"),
         col("band_hash"))
 
-  /** Band-bucket self-join → distinct candidate pairs (a < b), salted on
-    * skewed buckets. The (band_idx, band_hash) key is folded LOSSLESSLY into
-    * one long (band_hash < P, so band_idx·P + band_hash is invertible — no
-    * collision can merge two buckets): the band table is the largest shuffle
-    * of the dedup job, and one 8-byte key both halves the key bytes per row
-    * and gives single-column hash partitioning. Output pairs are identical
-    * to the two-column join (q06 oracle). */
+  /** (id, band_idx, band_hash) → (bucket, id): the (band_idx, band_hash)
+    * key folded LOSSLESSLY into one long (band_hash < P, so
+    * band_idx·P + band_hash is invertible — no collision can merge two
+    * buckets). The band table is the largest shuffle of the dedup job, and
+    * one 8-byte key both halves the key bytes per row and gives
+    * single-column hash partitioning. */
+  def fold(bandDf: DataFrame): DataFrame =
+    bandDf.select((col("band_idx") * lit(P) + col("band_hash")).as("bucket"), col("id"))
+
+  /** Band-bucket self-join on the [[fold]]ed key → distinct candidate pairs
+    * (a < b), salted on skewed buckets. Output pairs are identical to the
+    * two-column join (q06 oracle). */
   def candidatePairs(bandDf: DataFrame,
-                     saltCap: Int = SaltCap, saltFanout: Int = SaltFanout): DataFrame = {
-    val folded = bandDf.select(
-      (col("band_idx") * lit(P) + col("band_hash")).as("bucket"), col("id"))
-    SkewSalting.selfJoinPairs(folded, Seq("bucket"), "id", saltCap, saltFanout)
-  }
+                     saltCap: Int = SaltCap, saltFanout: Int = SaltFanout): DataFrame =
+    SkewSalting.selfJoinPairs(fold(bandDf), Seq("bucket"), "id", saltCap, saltFanout)
 
   /** Verify stage (SURVEY §2 B9): exact Jaccard on shingle sets, integer
     * rational threshold — runs only on candidate pairs. */
@@ -120,12 +122,9 @@ object MinHashLsh {
     * itself. */
   def candidatePairsAgainst(bandMaster: DataFrame, bandStaging: DataFrame,
                             saltCap: Int = SaltCap,
-                            saltFanout: Int = SaltFanout): DataFrame = {
-    def folded(bandDf: DataFrame): DataFrame = bandDf.select(
-      (col("band_idx") * lit(P) + col("band_hash")).as("bucket"), col("id"))
-    SkewSalting.crossJoinPairs(folded(bandMaster), folded(bandStaging),
+                            saltFanout: Int = SaltFanout): DataFrame =
+    SkewSalting.crossJoinPairs(fold(bandMaster), fold(bandStaging),
       Seq("bucket"), "id", saltCap, saltFanout)
-  }
 
   /** Incremental dedup: edges connecting STAGING rows into MASTER clusters
     * (master is assumed already deduped/clustered — its internal structure

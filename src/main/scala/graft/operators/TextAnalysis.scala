@@ -215,15 +215,19 @@ object TextAnalysis {
     * hashes; skew-salted like every bucket join. */
   def substringPairs(df: DataFrame, idCol: String, textCol: String,
                      l: Int = SubstringL,
-                     saltCap: Int = SaltCap, saltFanout: Int = SaltFanout): DataFrame = {
-    // gram key = rolling window fold over token hashes (one kernel pass per
-    // row) — never materializes l-token strings per position
-    val grams = df.select(col(idCol).as("id"),
+                     saltCap: Int = SaltCap, saltFanout: Int = SaltFanout): DataFrame =
+    SkewSalting.selfJoinPairs(gramTable(df, idCol, textCol, l),
+      Seq("gram_hash"), "id", saltCap, saltFanout)
+
+  /** Distinct (id, gram_hash) rows: one per l-token run of each doc. The
+    * gram key is a rolling window fold over token hashes (one kernel pass
+    * per row) — never materializes l-token strings per position. */
+  def gramTable(df: DataFrame, idCol: String, textCol: String,
+                l: Int = SubstringL): DataFrame =
+    df.select(col(idCol).as("id"),
         explode(graft.functions.GraftExpressions.gramHashes(
           tokens(col(textCol)), l)).as("gram_hash"))
       .distinct()
-    SkewSalting.selfJoinPairs(grams, Seq("gram_hash"), "id", saltCap, saltFanout)
-  }
 
   // ---- PII scrubbing (training-data hygiene: detect + redact emails,
   // IPv4 addresses and phone-like digit runs before anything trains on

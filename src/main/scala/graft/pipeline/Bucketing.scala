@@ -22,12 +22,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bucketing {
 
-  /** Persist `df` as catalog table `table`, bucketed AND sorted by `key`
-    * into `buckets` buckets (sorting enables sort-merge joins without the
-    * per-task sort). */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
+  /** Persist `df` as catalog table `table` in `format`, bucketed AND
+    * sorted by `key` into `buckets` buckets (sorting enables sort-merge
+    * joins without the per-task sort). */
+  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int,
+                    format: String = "parquet"): Unit =
     df.write.bucketBy(buckets, key).sortBy(key)
-      .mode("overwrite").format("parquet").saveAsTable(table)
+      .mode("overwrite").format(format).saveAsTable(table)
 
   def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
 }

@@ -47,8 +47,9 @@ trait StageStore {
 /** @param bucketSpec stage name → (bucket key column, bucket count) for
   *   stages that should persist hash-bucketed (e.g. the incremental corpus
   *   signature tables — [[graft.pipeline.IncrementalImageDedup.bucketSpec]]).
-  *   Bucketed stages go through the V1 `bucketBy(...).sortBy(...)` writer
-  *   (the session catalog's bucket metadata path); an Iceberg deployment
+  *   Bucketed stages go through [[Bucketing.writeBucketed]] (the V1
+  *   `bucketBy(...).sortBy(...)` writer, the session catalog's bucket
+  *   metadata path); an Iceberg deployment
   *   expresses the same layout as `partitionedBy(bucket(n, col))` on the
   *   writeTo path. Reads of a bucketed stage expose
   *   HashPartitioning(key, n), so downstream key-joins/aggs skip their
@@ -100,9 +101,7 @@ class CatalogStageCheckpoint(spark: SparkSession, namespace: String,
     } else {
       val t0 = System.nanoTime()
       bucketSpec(name) match {
-        case Some((key, n)) =>
-          compute.write.bucketBy(n, key).sortBy(key)
-            .mode("overwrite").format(format).saveAsTable(tbl(name))
+        case Some((key, n)) => Bucketing.writeBucketed(compute, tbl(name), key, n, format)
         case None =>
           compute.writeTo(tbl(name)).using(format).create()
       }
@@ -124,33 +123,12 @@ class CatalogStageCheckpoint(spark: SparkSession, namespace: String,
       metrics.writeTo(tbl(s"${name}__metrics")).using(format).create()
     }
 
-  /** Migrate a pre-seq (3-column: stage, rows, wall_ms) manifest written by
-    * an earlier format to the current 4-column layout, once, on first touch
-    * (ADVICE r3 medium: resuming such a namespace crashed appendManifest's
-    * positional insertInto and manifest()'s orderBy(seq)). seq is backfilled
-    * from read-back row order — the best commit-order evidence a pre-seq
-    * manifest has (and for the small, single-file manifests these stores
-    * write, parquet read-back preserves append order in practice). Manifests
-    * are tiny (one row per stage), so collect + rewrite is cheap. */
-  private def migrateManifestIfNeeded(): Unit =
-    if (spark.catalog.tableExists(manifestTbl) &&
-        !spark.table(manifestTbl).columns.contains("seq")) {
-      import spark.implicits._
-      val old = spark.table(manifestTbl).collect()
-        .zipWithIndex.map { case (r, i) =>
-          (i.toLong, r.getString(0), r.getLong(1), r.getLong(2)) }.toSeq
-      spark.sql(s"DROP TABLE $manifestTbl")
-      old.toDF("seq", "stage", "rows", "wall_ms")
-        .writeTo(manifestTbl).using(format).create()
-    }
-
   private def manifestHas(name: String): Boolean =
     spark.catalog.tableExists(manifestTbl) &&
       !spark.table(manifestTbl).where(col("stage") === name).isEmpty
 
   private def appendManifest(name: String, rows: Long, wallMs: Long): Unit = {
     import spark.implicits._
-    migrateManifestIfNeeded()
     // seq carries the commit order explicitly — a parquet read-back has no
     // row-order guarantee. Single-writer protocol (one driver owns a run's
     // namespace), so count-at-append is a valid monotone sequence.
@@ -169,10 +147,8 @@ class CatalogStageCheckpoint(spark: SparkSession, namespace: String,
   }
 
   /** Completed stages in commit order: (stage, rows, wall_ms). */
-  def manifest(): Seq[(String, Long, Long)] = {
-    migrateManifestIfNeeded()
+  def manifest(): Seq[(String, Long, Long)] =
     if (!spark.catalog.tableExists(manifestTbl)) Nil
     else spark.table(manifestTbl).orderBy(col("seq")).collect()
       .map(r => (r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.config.GoldenConfig._
-import graft.operators.{MinHashLsh, SkewSalting, SimHashNearDup, TextAnalysis, ConnectedComponents}
+import graft.operators.{MinHashLsh, SkewSalting, TextAnalysis, ConnectedComponents}
 import graft.images.ImageCodec
 
 /** The flagship job (BASELINE.json north_star): near-duplicate detection +
@@ -171,6 +171,90 @@ object ImageDedupPipeline {
       .select(col("a"), col("b"))
   }
 
+  // ---- projections of the annotated table (one row per input row)
+  /** Exact-dup representatives: one row per (caption, bytes_hash) class. */
+  private[pipeline] def repsOf(ann: DataFrame): DataFrame = ann.where(col("image_id") === col("rep"))
+  /** Caption representatives: one (cid, caption) row per distinct caption. */
+  private[pipeline] def capRepsOf(ann: DataFrame): DataFrame =
+    ann.where(col("image_id") === col("cid")).select(col("cid"), col("caption"))
+  /** Member map (cid, image_id): the exact-class reps of each caption. */
+  private[pipeline] def membersOf(ann: DataFrame): DataFrame =
+    repsOf(ann).select(col("cid"), col("image_id"))
+  /** Lossless exact-dup edges (rep, member) for every non-rep row. */
+  private[pipeline] def starEdgesOf(ann: DataFrame): DataFrame =
+    ann.where(col("image_id") =!= col("rep")).select(col("rep").as("a"), col("image_id").as("b"))
+
+  /** MinHash-LSH band rows (id, band_idx, band_hash) per caption rep. */
+  private[pipeline] def bandsOf(capReps: DataFrame): DataFrame =
+    MinHashLsh.bands(MinHashLsh.signaturesFromText(capReps, "cid", "caption"))
+
+  /** Expand caption-level pairs (cid_a, cid_b) → (least, greatest) pairs
+    * of their exact-class reps through each side's member map; member
+    * counts per caption are tiny once exact/caption-equal classes are
+    * collapsed. */
+  private[pipeline] def expand(capPairs: DataFrame, membersA: DataFrame,
+                               membersB: DataFrame): DataFrame =
+    capPairs
+      .join(membersA.select(col("cid").as("a"), col("image_id").as("ia")), "a")
+      .join(membersB.select(col("cid").as("b"), col("image_id").as("ib")), "b")
+      .select(least(col("ia"), col("ib")).as("a"), greatest(col("ia"), col("ib")).as("b"))
+
+  /** Shingle/gram hash arrays routed row → cid → arrays (computed once per
+    * caption, never per pair): (image_id, shingles, grams). */
+  private[pipeline] def routeShingles(members: DataFrame, sh: DataFrame): DataFrame =
+    members.join(sh.select(col("id").as("cid"), col("shingles"), col("grams")), "cid")
+      .select(col("image_id"), col("shingles"), col("grams"))
+
+  /** Composable corpus fingerprint: (row count, xor of image_id hashes).
+    * Both components compose under disjoint union, so an absorb extends a
+    * staged fingerprint from its delta alone, with no corpus rescan. */
+  private[pipeline] def fingerprint(df: DataFrame): (Long, Long) = {
+    val r = df.agg(count(lit(1)), bit_xor(xxhash64(col("image_id")))).head()
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
+  private[pipeline] def stageFingerprint(spark: SparkSession, ckpt: StageStore, name: String,
+                                         fp: (Long, Long)): Unit =
+    ckpt.stage(name)(spark.createDataFrame(Seq(fp)).toDF("cnt", "xh"))
+
+  /** Candidate stages s3–s5 over ONE annotated table → row-level pairs
+    * (a < b, src). The full run applies them to its whole input; an import
+    * applies them to its delta alone (the delta×delta leg, staged under the
+    * import's namespace), so both pipelines block with one definition.
+    *
+    * s3/s4 are caption-level (MinHash-LSH bands, shared L-token run) and
+    * expand to rows through the member map; near-caption pairs between two
+    * viral-size captions would inflate that expansion, but the verify
+    * ladder's Hamming filter runs right after it.
+    *
+    * s5: phash chunk buckets WITHIN caption groups (composite blocking
+    * key, cf. the reference's multi-scheme blocking). The dup semantics
+    * require caption-near AND image-near, and the binding caption
+    * constraint must drive candidate generation: a global phash join
+    * explodes whenever image space is less diverse than id space
+    * (measured: 20k procedural images → 452 phash values → 35M row pairs).
+    * Within-caption it covers exactly the class LSH/substring can't: equal
+    * captions too short to shingle + near-identical images (D3). Caption
+    * groups are keyed by cid, so the blocking key never shuffles the
+    * caption STRING. The standalone image-only operator remains
+    * SimHashNearDup. */
+  private[pipeline] def candidates(annotated: DataFrame, ckpt: StageStore): DataFrame = {
+    val capReps = capRepsOf(annotated)
+    val lshPairs = ckpt.stage("s3_lsh_pairs")(MinHashLsh.candidatePairs(bandsOf(capReps)))
+    val substrPairs = ckpt.stage("s4_substr_pairs") {
+      TextAnalysis.substringPairs(capReps, "cid", "caption")
+    }
+    val members = membersOf(annotated)
+    val textPairs = expand(lshPairs, members, members).withColumn("src", lit("minhash"))
+      .unionByName(expand(substrPairs, members, members).withColumn("src", lit("substring")))
+    val imgPairs = ckpt.stage("s5_img_pairs") {
+      SkewSalting.selfJoinPairs(phashChunks(repsOf(annotated), col("cid")),
+          Seq("bucket"), "id", SaltCap, SaltFanout)
+        .withColumn("src", lit("phash"))
+    }
+    textPairs.unionByName(imgPairs)
+  }
+
   private def runImpl(spark: SparkSession, input: DataFrame, ckpt: StageStore): DataFrame = {
 
     val s1Fresh = !ckpt.isDone("s1_annotated")
@@ -179,82 +263,19 @@ object ImageDedupPipeline {
     // record the fingerprint IncrementalImageDedup enforces, so a later
     // import reusing this store's s1/s2 snapshots runs verified (only
     // when this run staged s1 itself, into a durable store)
-    if (s1Fresh && ckpt.isDone("s1_annotated") &&
-        !ckpt.isDone("inc_corpus_fprint")) {
-      val r = input.agg(count(lit(1)),
-        bit_xor(xxhash64(col("image_id")))).head()
-      val x = if (r.isNullAt(1)) 0L else r.getLong(1)
-      import spark.implicits._
-      ckpt.stage("inc_corpus_fprint")(Seq((r.getLong(0), x)).toDF("cnt", "xh"))
-    }
-    val starEdges = ckpt.stage("s1_star_edges") {
-      annotated.where(col("image_id") =!= col("rep"))
-        .select(col("rep").as("a"), col("image_id").as("b"))
-    }
-    // exact-dup representatives (one row per (caption, bytes_hash) class)
-    val reps = annotated.where(col("image_id") === col("rep"))
-    // caption representatives (one row per distinct caption)
-    val capReps = annotated.where(col("image_id") === col("cid"))
-      .select(col("cid"), col("caption"))
-
-    val shingleTbl = ckpt.stage("s2_shingles")(shingleGramTable(capReps))
-    val lshPairs = ckpt.stage("s3_lsh_pairs") {
-      MinHashLsh.candidatePairs(
-        MinHashLsh.bands(MinHashLsh.signaturesFromText(capReps, "cid", "caption")))
-    }
-
-    // ---- stage: substring (L-gram) candidates, caption-level
-    val substrPairs = ckpt.stage("s4_substr_pairs") {
-      TextAnalysis.substringPairs(capReps, "cid", "caption")
-    }
-
-    // expand caption-level pairs (cid_a, cid_b) → row pairs; member counts
-    // per caption are tiny once exact/caption-equal classes are collapsed
-    // (near-caption pairs between two viral-size captions would inflate
-    // this join — the verify ladder's Hamming filter is applied right after,
-    // so nothing survives materialization past this select). A plain
-    // projection of the annotated stage — no join, no extra materialization.
-    val memberMap = reps.select(col("cid"), col("image_id"))
-    def expand(capPairs: DataFrame, src: String): DataFrame =
-      capPairs
-        .join(memberMap.select(col("cid").as("a"), col("image_id").as("ia")), "a")
-        .join(memberMap.select(col("cid").as("b"), col("image_id").as("ib")), "b")
-        .select(least(col("ia"), col("ib")).as("a"),
-          greatest(col("ia"), col("ib")).as("b"))
-        .withColumn("src", lit(src))
-
-    val textPairs = expand(lshPairs, "minhash")
-      .unionByName(expand(substrPairs, "substring"))
-
-    // ---- stage: image candidates — phash chunk buckets WITHIN caption
-    // groups (composite blocking key, cf. the reference's multi-scheme
-    // blocking). The dup semantics require caption-near AND image-near, and
-    // the binding caption constraint must drive candidate generation: a
-    // global phash join explodes whenever image space is less diverse than
-    // id space (measured: 20k procedural images → 452 phash values → 35M
-    // row pairs). Within-caption it covers exactly the class LSH/substring
-    // can't: equal captions too short to shingle + near-identical images
-    // (D3). The standalone image-only operator remains SimHashNearDup.
-    val imgPairs = ckpt.stage("s5_img_pairs") {
-      // caption groups are identified by cid (the caption-rep id), so the
-      // blocking key never shuffles the caption STRING
-      SkewSalting.selfJoinPairs(phashChunks(reps, col("cid")),
-          Seq("bucket"), "id", SaltCap, SaltFanout)
-        .withColumn("src", lit("phash"))
-    }
+    if (s1Fresh && ckpt.isDone("s1_annotated") && !ckpt.isDone("inc_corpus_fprint"))
+      stageFingerprint(spark, ckpt, "inc_corpus_fprint", fingerprint(input))
+    val starEdges = ckpt.stage("s1_star_edges")(starEdgesOf(annotated))
+    val shingleTbl = ckpt.stage("s2_shingles")(shingleGramTable(capRepsOf(annotated)))
+    val pairs = candidates(annotated, ckpt)
 
     // ---- stage: verify — caption criterion AND image criterion
     val verified = ckpt.stage("s6_verified_edges") {
-      val cand = textPairs.unionByName(imgPairs)
-        .select("a", "b").dropDuplicates("a", "b")
-      // shingle/gram hash arrays are keyed by caption-rep id — route
-      // row → cid → arrays (computed once per caption, never per pair)
-      val shByRow = memberMap
-        .join(shingleTbl.select(col("id").as("cid"), col("shingles"), col("grams")), "cid")
-        .select(col("image_id"), col("shingles"), col("grams"))
+      val cand = pairs.select("a", "b").dropDuplicates("a", "b")
+      val shByRow = routeShingles(membersOf(annotated), shingleTbl)
         .localCheckpoint(false) // joined twice (a and b side)
       verifyLadder(cand,
-        reps.select(col("image_id"), col("caption"), col("bytes_hash"), col("phash")),
+        repsOf(annotated).select(col("image_id"), col("caption"), col("bytes_hash"), col("phash")),
         shByRow,
         input.select(col("image_id"), col("bytes")))
     }

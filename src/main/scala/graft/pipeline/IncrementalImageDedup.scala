@@ -3,7 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.config.GoldenConfig._
-import graft.operators.{MinHashLsh, SkewSalting, ConnectedComponents}
+import graft.operators.{MinHashLsh, SkewSalting, TextAnalysis, ConnectedComponents}
+import ImageDedupPipeline.{run => _, runDirect => _, _}
 
 /** Incremental (delta-vs-corpus) image dedup — the production shape of the
   * reference's staging-vs-master import (R:.../deduplication/Blocking.scala
@@ -22,8 +23,9 @@ import graft.operators.{MinHashLsh, SkewSalting, ConnectedComponents}
   *    [[SkewSalting.crossJoinPairs]] drops corpus buckets with no delta row
   *    map-side (bloom over pairable keys), so the shuffle volume tracks the
   *    DELTA's bucket footprint, not the corpus's.
-  *  - delta-internal duplicates are found by the same self-join path as the
-  *    full pipeline, on the (small) delta only.
+  *  - delta-internal duplicates are found by the full pipeline's own
+  *    candidate stages s3–s5 ([[ImageDedupPipeline.candidates]]), run on
+  *    the (small) delta only.
   *
   * Semantics: identical duplicate criterion as [[ImageDedupPipeline]] (one
   * shared verify ladder). Output clusters = connected components over
@@ -39,8 +41,9 @@ object IncrementalImageDedup {
 
   /** Corpus-artifact stage name at generation `gen`: gen 0 keeps the
     * original un-suffixed names; generations ≥ 1 carry a `_g<N>` suffix
-    * (FULL artifacts: legacy copy-on-write absorbs and [[compactGenerations]]
-    * output). [[absorb]] itself stages only `_d<N>` DELTA artifacts. */
+    * (FULL artifacts written by [[compactGenerations]], plus the per-
+    * generation marker and fingerprint). [[absorb]] itself stages only
+    * `_d<N>` DELTA artifacts. */
   private def corpusName(base: String, gen: Int): String =
     if (gen == 0) base else s"${base}_g$gen"
 
@@ -54,23 +57,10 @@ object IncrementalImageDedup {
     * Each absorb commits a one-row `inc_corpus_gen_g<N>` marker LAST — the
     * durable generation anchor that [[pruneGenerations]] never drops (the
     * probe would otherwise break once a pruned middle generation left a
-    * hole). Markers are AUTHORITATIVE once any exists; the full-annotated
-    * fallback applies ONLY to marker-less legacy stores (absorbed before
-    * markers existed, where the full `inc_corpus_annotated_g<N>` table was
-    * the last-committed stage) — a store WITH markers never resolves a
-    * generation through a table a crashed absorb may have left behind
-    * (advisor finding: the unconditional fallback let a crash between the
-    * annotated and marker commits double-absorb on re-run). */
-  def latestGen(ckpt: StageStore): Int = {
-    var g = 0
-    while (ckpt.isDone(corpusName("inc_corpus_gen", g + 1))) g += 1
-    if (g > 0) g
-    else {
-      var h = 0
-      while (ckpt.isDone(corpusName("inc_corpus_annotated", h + 1))) h += 1
-      h
-    }
-  }
+    * hole). Markers are the only evidence of a generation: a store never
+    * resolves one through a table a crashed absorb may have left behind. */
+  def latestGen(ckpt: StageStore): Int =
+    Iterator.from(1).takeWhile(g => ckpt.isDone(corpusName("inc_corpus_gen", g))).size
 
   /** The generation whose FULL artifact set serves as the union-on-read
     * base for `base` at generation `gen`: the highest `b ≤ gen` whose full
@@ -114,24 +104,10 @@ object IncrementalImageDedup {
     }
   }
 
-  /** Composable corpus fingerprint: (row count, xor of image_id hashes).
-    * Both components compose under disjoint union — absorb() extends the
-    * staged fingerprint from the delta's alone, no corpus rescan. */
-  private def fingerprint(df: DataFrame): (Long, Long) = {
-    val r = df.agg(count(lit(1)), bit_xor(xxhash64(col("image_id")))).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
-
-  // delta/corpus signature builders shared by run() and absorb()
-  private def bandsOf(capReps: DataFrame): DataFrame = MinHashLsh.bands(
-    MinHashLsh.signaturesFromText(capReps, "cid", "caption"))
-  private def gramsOf(capReps: DataFrame): DataFrame = capReps
-    .select(col("cid").as("id"),
-      explode(graft.functions.GraftExpressions.gramHashes(
-        graft.functions.TextHash.tokens(col("caption")), SubstringL)).as("gram_hash"))
-    .distinct()
-  private def foldBands(b: DataFrame): DataFrame = b.select(
-    (col("band_idx") * lit(P) + col("band_hash")).as("bucket"), col("id"))
+  // corpus-side signature tables, as run() and absorb() stage them: bands
+  // pre-folded to (bucket, id), L-gram hashes as (id, gram_hash)
+  private def foldedBands(capReps: DataFrame): DataFrame = MinHashLsh.fold(bandsOf(capReps))
+  private def gramsOf(capReps: DataFrame): DataFrame = TextAnalysis.gramTable(capReps, "cid", "caption")
 
   /** The current (latest-generation) folded corpus band snapshot —
     * what streaming ingest joins
@@ -205,12 +181,6 @@ object IncrementalImageDedup {
     * @return the dropped stage names */
   def pruneGenerations(ckpt: StageStore): Seq[String] = {
     val latest = latestGen(ckpt)
-    // the probe chain must rest on markers once annotated tables start
-    // disappearing — refuse to prune a store whose absorbs predate them
-    require((1 to latest).forall(g => ckpt.isDone(corpusName("inc_corpus_gen", g))),
-      "pruneGenerations requires the per-generation marker stages " +
-        "(inc_corpus_gen_g<N>); this store's absorbs predate them — " +
-        "re-absorb the next delta first or leave the store unpruned")
     // superseded-ness is PER BASE: each artifact resolves its own full
     // base generation (corpusArtifactAt), so after a compaction that
     // crashed mid-way (some bases re-based at N, others not) the
@@ -281,11 +251,10 @@ object IncrementalImageDedup {
     // O(|corpus|) term a caller may drop (fingerprintCheck = false) when
     // snapshot identity is already enforced outside, e.g. an Iceberg
     // snapshot id pinning exactly which corpus version the artifacts were
-    // derived from. Stores whose artifacts predate the fingerprint (or
-    // whose staging crashed before the fingerprint landed) stay
-    // UNVERIFIED rather than falsely certified: the fingerprint is only
-    // ever recorded by the run that staged every corpus artifact itself
-    // (see below). ----
+    // derived from. Stores whose staging crashed before the fingerprint
+    // landed stay UNVERIFIED rather than falsely certified: the
+    // fingerprint is only ever recorded by the run that staged every
+    // corpus artifact itself (see below). ----
     val gen = latestGen(ckpt)
     def cn(base: String): String = corpusName(base, gen)
     val fpName = cn("inc_corpus_fprint")
@@ -325,24 +294,17 @@ object IncrementalImageDedup {
         else ckpt.stage(base)(compute)
       } else corpusArtifactAt(ckpt, base, gen, g0Alias)
 
-    val annC = corpusArtifact("inc_corpus_annotated", Some("s1_annotated"))(
-      ImageDedupPipeline.annotate(corpus))
-    val annD = imp.stage("inc_delta_annotated")(ImageDedupPipeline.annotate(delta))
-    val repsC = annC.where(col("image_id") === col("rep"))
-    val repsD = annD.where(col("image_id") === col("rep"))
-    val capRepsC = annC.where(col("image_id") === col("cid")).select(col("cid"), col("caption"))
-    val capRepsD = annD.where(col("image_id") === col("cid")).select(col("cid"), col("caption"))
-    val starD = annD.where(col("image_id") =!= col("rep"))
-      .select(col("rep").as("a"), col("image_id").as("b"))
-    val memberC = repsC.select(col("cid"), col("image_id"))
-    val memberD = repsD.select(col("cid"), col("image_id"))
+    val annC = corpusArtifact("inc_corpus_annotated", Some("s1_annotated"))(annotate(corpus))
+    val annD = imp.stage("inc_delta_annotated")(annotate(delta))
+    val (repsC, repsD) = (repsOf(annC), repsOf(annD))
+    val (capRepsC, capRepsD) = (capRepsOf(annC), capRepsOf(annD))
+    val (memberC, memberD) = (membersOf(annC), membersOf(annD))
 
-    val shC = corpusArtifact("inc_corpus_shingles", Some("s2_shingles"))(
-      ImageDedupPipeline.shingleGramTable(capRepsC))
-    val shD = imp.stage("inc_delta_shingles")(ImageDedupPipeline.shingleGramTable(capRepsD))
+    val shC = corpusArtifact("inc_corpus_shingles", Some("s2_shingles"))(shingleGramTable(capRepsC))
+    val shD = imp.stage("inc_delta_shingles")(shingleGramTable(capRepsD))
 
-    // ---- caption-level candidates (cid, cid). The corpus-side signature
-    // tables (LSH bands, L-gram hashes, phash chunks) are the heavy linear
+    // ---- corpus-side signature tables (LSH bands, L-gram hashes, phash
+    // chunks), the cross leg's left sides. They are the heavy linear
     // CPU of an import — staged under corpus-keyed names so a warm import
     // re-reads columnar snapshots instead of re-hashing the corpus.
     // Corpus bands are staged pre-FOLDED to (bucket, id) — two longs per
@@ -360,64 +322,40 @@ object IncrementalImageDedup {
       else (corpusArtifactAt(ckpt, base, gen, None),
         fullBaseGen(ckpt, base, gen, None).contains(gen) &&
           ckpt.isBucketed(corpusName(base, gen)))
-    val (bandC, bandsBk) = signatureArtifact("inc_corpus_bands")(foldBands(bandsOf(capRepsC)))
+    val (bandC, bandsBk) = signatureArtifact("inc_corpus_bands")(foldedBands(capRepsC))
     val (gramC, gramsBk) = signatureArtifact("inc_corpus_grams")(gramsOf(capRepsC))
     val (chunkC, chunksBk) = signatureArtifact("inc_corpus_phchunks")(
-      ImageDedupPipeline.phashChunks(repsC, col("caption")))
+      phashChunks(repsC, col("caption")))
 
     // Record the fingerprint ONLY when this very run staged every corpus
     // artifact (freshCorpusStaging — implies generation 0) into a durable
     // store (bands isDone after staging) — a store holding artifacts of
-    // unknown provenance (pre-fingerprint format, or a crash between
-    // artifact and fingerprint commits) must stay unverified forever
-    // rather than be certified against whatever corpus happens to be
-    // passed next (review finding).
-    if (freshCorpusStaging && ckpt.isDone("inc_corpus_bands") && !ckpt.isDone(fpName)) {
-      val (c, x) = fingerprint(corpus)
-      import spark.implicits._
-      ckpt.stage(fpName)(Seq((c, x)).toDF("cnt", "xh"))
-    }
+    // unknown provenance (a crash between artifact and fingerprint
+    // commits) must stay unverified forever rather than be certified
+    // against whatever corpus happens to be passed next (review finding).
+    if (freshCorpusStaging && ckpt.isDone("inc_corpus_bands") && !ckpt.isDone(fpName))
+      stageFingerprint(spark, ckpt, fpName, fingerprint(corpus))
 
+    // ---- corpus×delta candidates, as (least, greatest) pairs like every
+    // other leg so one dropDuplicates spans all of them. Image buckets key
+    // on the caption STRING hash (per-side cids are not comparable).
     val capCross = imp.stage("inc_cap_cross_pairs") {
-      SkewSalting.crossJoinPairs(bandC, foldBands(bandsOf(capRepsD)),
+      SkewSalting.crossJoinPairs(bandC, foldedBands(capRepsD),
           Seq("bucket"), "id", SaltCap, SaltFanout, leftBucketed = bandsBk)
         .unionByName(SkewSalting.crossJoinPairs(gramC, gramsOf(capRepsD),
           Seq("gram_hash"), "id", SaltCap, SaltFanout, leftBucketed = gramsBk))
     }
-    val capSelfD = imp.stage("inc_cap_delta_pairs") {
-      MinHashLsh.candidatePairs(bandsOf(capRepsD))
-        .unionByName(SkewSalting.selfJoinPairs(gramsOf(capRepsD),
-          Seq("gram_hash"), "id", SaltCap, SaltFanout))
-    }
-
-    // expand (cid_a, cid_b) → exact-class rep pairs; cross keeps
-    // (a = corpus id, b = delta id), delta-self orders a < b
-    val crossRows = capCross
-      .join(memberC.select(col("cid").as("a"), col("image_id").as("ia")), "a")
-      .join(memberD.select(col("cid").as("b"), col("image_id").as("ib")), "b")
-      .select(col("ia").as("a"), col("ib").as("b"))
-    val selfRowsD = capSelfD
-      .join(memberD.select(col("cid").as("a"), col("image_id").as("ia")), "a")
-      .join(memberD.select(col("cid").as("b"), col("image_id").as("ib")), "b")
-      .select(least(col("ia"), col("ib")).as("a"), greatest(col("ia"), col("ib")).as("b"))
-
-    // ---- image candidates: phash chunks within caption groups. Cross
-    // buckets key on the caption STRING hash (per-side cids are not
-    // comparable); delta-self keys on the cheaper long cid like the full
-    // pipeline.
-    val phCross = SkewSalting.crossJoinPairs(
-      chunkC,
-      ImageDedupPipeline.phashChunks(repsD, col("caption")),
-      Seq("bucket"), "id", SaltCap, SaltFanout, leftBucketed = chunksBk)
-    val phSelfD = SkewSalting.selfJoinPairs(
-      ImageDedupPipeline.phashChunks(repsD, col("cid")),
-      Seq("bucket"), "id", SaltCap, SaltFanout)
+    val crossRows = expand(capCross, memberC, memberD)
+    val phCross = SkewSalting.crossJoinPairs(chunkC, phashChunks(repsD, col("caption")),
+        Seq("bucket"), "id", SaltCap, SaltFanout, leftBucketed = chunksBk)
+      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
+    // ---- delta×delta candidates: the full run's stages s3–s5, on the delta
+    val selfD = candidates(annD, imp).select("a", "b")
 
     // ---- ONE verify ladder over all candidates, with per-side metadata
     // unioned (ids are globally unique) ----
     val verified = imp.stage("inc_verified_edges") {
-      val cand = crossRows.unionByName(selfRowsD)
-        .unionByName(phCross).unionByName(phSelfD)
+      val cand = crossRows.unionByName(phCross).unionByName(selfD)
         .dropDuplicates("a", "b")
         .localCheckpoint(false) // consumed by candIds AND the ladder
       val capt = repsC.unionByName(repsD)
@@ -428,14 +366,12 @@ object IncrementalImageDedup {
       val candIds = cand.select(col("a").as("image_id"))
         .unionByName(cand.select(col("b").as("image_id"))).distinct()
       def routed(member: DataFrame, sh: DataFrame): DataFrame =
-        member.join(candIds, Seq("image_id"), "left_semi")
-          .join(sh.select(col("id").as("cid"), col("shingles"), col("grams")), "cid")
+        routeShingles(member.join(candIds, Seq("image_id"), "left_semi"), sh)
       val shByRow = routed(memberC, shC).unionByName(routed(memberD, shD))
-        .select(col("image_id"), col("shingles"), col("grams"))
         .localCheckpoint(false)
       val bytesTbl = corpus.select(col("image_id"), col("bytes"))
         .unionByName(delta.select(col("image_id"), col("bytes")))
-      ImageDedupPipeline.verifyLadder(cand, capt, shByRow, bytesTbl)
+      verifyLadder(cand, capt, shByRow, bytesTbl)
     }
     // the verified-edges stage commit drained every candidate pair plan —
     // release the corpus slices the leftBucketed cross joins cached
@@ -458,7 +394,7 @@ object IncrementalImageDedup {
     // full re-run's clustering (pinned by IncrementalImageDedupSpec). ----
     imp.stage("inc_clusters") {
       val newEdges = verified.select("a", "b")
-        .unionByName(starD)
+        .unionByName(starEdgesOf(annD))
         .localCheckpoint(false)
       val touched = newEdges.select(col("a").as("image_id"))
         .unionByName(newEdges.select(col("b").as("image_id"))).distinct()
@@ -505,11 +441,7 @@ object IncrementalImageDedup {
     * unchanged and a re-run completes the remaining stages idempotently
     * (StageStore.stage skips committed ones). A re-run AFTER the marker
     * landed is a no-op returning the committed generation (the marker
-    * records which import it absorbed). Complete-but-unmarked generations
-    * left by pre-marker absorb versions are healed at entry (advisor
-    * finding): their marker is committed, and this call's import is
-    * tested for membership (one recovery-path scan) to decide between
-    * "already absorbed" and "absorb above it".
+    * records which import it absorbed).
     *
     * Batch-wise annotation: the absorbed corpus artifacts are the UNION of
     * per-batch annotations, not a re-annotation of corpus ∪ delta — an
@@ -527,7 +459,7 @@ object IncrementalImageDedup {
     * @return the corpus generation holding this import's delta */
   def absorb(spark: SparkSession, ckpt: StageStore, importId: String): Int = {
     import spark.implicits._
-    var gen = latestGen(ckpt)
+    val gen = latestGen(ckpt)
 
     // no-op re-run: the LATEST generation's marker recording this import
     // means its absorb completed (crash after the marker, or a caller
@@ -537,11 +469,8 @@ object IncrementalImageDedup {
     // daily absorb pay O(days) driver round-trips — review finding) and
     // is caught loudly by the next run(): the composed fingerprint's row
     // count double-counts the duplicated ids and mismatches the corpus.
-    if (gen >= 1 && ckpt.isDone(corpusName("inc_corpus_gen", gen))) {
-      val m = served(ckpt, corpusName("inc_corpus_gen", gen))
-      if (m.columns.contains("import_id") &&
-          m.head().getAs[String]("import_id") == importId) return gen
-    }
+    if (gen >= 1 && served(ckpt, corpusName("inc_corpus_gen", gen))
+        .head().getAs[String]("import_id") == importId) return gen
 
     def done(n: String): DataFrame = {
       require(ckpt.isDone(n),
@@ -551,47 +480,6 @@ object IncrementalImageDedup {
     }
     val annD = done(s"${importId}_inc_delta_annotated")
     val shD = done(s"${importId}_inc_delta_shingles")
-
-    // heal a complete-but-unmarked generation from a pre-marker absorb
-    // version (whose FULL annotated table was the final artifact commit):
-    // either latestGen itself resolved through the legacy annotated
-    // fallback without a marker, or a full annotated set sits one above
-    // the marker chain. Commit its missing marker, then decide whether
-    // THIS import was the one it absorbed (single-writer discipline makes
-    // the crashed import the one being re-run).
-    val unmarkedTop =
-      if (gen >= 1 && !ckpt.isDone(corpusName("inc_corpus_gen", gen))) Some(gen)
-      else if (ckpt.isDone(corpusName("inc_corpus_annotated", gen + 1)) &&
-               !ckpt.isDone(corpusName("inc_corpus_gen", gen + 1))) Some(gen + 1)
-      else None
-    unmarkedTop.foreach { t =>
-      val healedAnn = served(ckpt, corpusName("inc_corpus_annotated", t))
-      val dIds = annD.select(col("image_id"))
-      val inHealed = dIds.join(healedAnn.select(col("image_id")),
-        Seq("image_id"), "left_semi").count()
-      val dCnt = dIds.count()
-      require(inHealed == 0L || inHealed == dCnt,
-        s"absorb('$importId'): healed legacy generation $t contains $inHealed of " +
-          s"this import's $dCnt delta rows (expected none or all) — store is corrupt")
-      val owner = if (inHealed == dCnt) importId else "legacy-unknown"
-      // heal EVERY marker-less generation up to t, not just t: a
-      // multi-generation legacy store resolved through the annotated
-      // fallback, and once this call commits markers ABOVE the legacy
-      // range, latestGen becomes markers-authoritative — a hole at any
-      // g ≤ t would end the probe chain there and make every later
-      // generation's delta invisible (review finding)
-      (1 to t).foreach { g =>
-        if (!ckpt.isDone(corpusName("inc_corpus_gen", g)))
-          ckpt.stage(corpusName("inc_corpus_gen", g))(
-            Seq((g, if (g == t) owner else "legacy-unknown"))
-              .toDF("gen", "import_id"))
-      }
-      gen = t
-    }
-    if (unmarkedTop.contains(gen) && ckpt.isDone(corpusName("inc_corpus_gen", gen)) &&
-        served(ckpt, corpusName("inc_corpus_gen", gen))
-          .head().getAs[String]("import_id") == importId)
-      return gen
 
     // the store must hold corpus artifacts to absorb into
     require(fullBaseGen(ckpt, "inc_corpus_bands", gen, None).isDefined,
@@ -610,20 +498,17 @@ object IncrementalImageDedup {
 
     // delta contributions recomputed from the staged delta annotation —
     // delta-sized work only, staged as delta-only artifacts
-    val capRepsD = annD.where(col("image_id") === col("cid")).select(col("cid"), col("caption"))
-    val repsD = annD.where(col("image_id") === col("rep"))
-    ckpt.stage(deltaName("inc_corpus_bands", next))(foldBands(bandsOf(capRepsD)))
-    ckpt.stage(deltaName("inc_corpus_grams", next))(gramsOf(capRepsD))
-    ckpt.stage(deltaName("inc_corpus_phchunks", next))(
-      ImageDedupPipeline.phashChunks(repsD, col("caption")))
+    ckpt.stage(deltaName("inc_corpus_bands", next))(foldedBands(capRepsOf(annD)))
+    ckpt.stage(deltaName("inc_corpus_grams", next))(gramsOf(capRepsOf(annD)))
+    ckpt.stage(deltaName("inc_corpus_phchunks", next))(phashChunks(repsOf(annD), col("caption")))
     ckpt.stage(deltaName("inc_corpus_shingles", next))(shD)
     ckpt.stage(deltaName("inc_corpus_annotated", next))(annD)
     // fingerprint composes (disjoint-id contract): no corpus scan
     if (ckpt.isDone(corpusName("inc_corpus_fprint", gen))) {
       val prev = served(ckpt, corpusName("inc_corpus_fprint", gen)).head()
       val (dc, dx) = fingerprint(annD)
-      ckpt.stage(corpusName("inc_corpus_fprint", next))(
-        Seq((prev.getLong(0) + dc, prev.getLong(1) ^ dx)).toDF("cnt", "xh"))
+      stageFingerprint(spark, ckpt, corpusName("inc_corpus_fprint", next),
+        (prev.getLong(0) + dc, prev.getLong(1) ^ dx))
     }
     // the (gen, import_id) marker commits LAST: latestGen() probes it, so
     // the generation bump is atomic-at-the-probe (a crash mid-absorb

@@ -65,31 +65,6 @@ class CatalogStageCheckpointSpec extends AnyFlatSpec with Matchers with SparkTes
     } finally spark.sql(s"DROP NAMESPACE IF EXISTS $ns CASCADE")
   }
 
-  it should "migrate a pre-seq 3-column manifest on first touch and keep appending" in {
-    val (ns, loc) = freshNs("migr")
-    try {
-      // a namespace written by the previous (seq-less) manifest format:
-      // one committed stage + its 3-column manifest row
-      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $ns LOCATION '$loc'")
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-        .writeTo(s"$ns.s_old").using("parquet").create()
-      Seq(("s_old", 2L, 17L)).toDF("stage", "rows", "wall_ms")
-        .writeTo(s"$ns._manifest").using("parquet").create()
-
-      val ck = new CatalogStageCheckpoint(spark, ns, location = Some(loc))
-      // resume the old stage (no recompute) and commit a NEW one — the
-      // pre-fix code crashed here on insertInto column-count mismatch
-      ck.stage("s_old") { fail("must not recompute"); null }.count() shouldBe 2
-      ck.stage("s_new") { Seq((3L, "c")).toDF("id", "v") }.count() shouldBe 1
-      // commit order preserved: migrated row first, new commit after
-      ck.manifest().map(_._1) shouldBe Seq("s_old", "s_new")
-      ck.manifest().head shouldBe (("s_old", 2L, 17L))
-      // manifest() on a migrated-but-untouched namespace also works
-      val ck2 = new CatalogStageCheckpoint(spark, ns, location = Some(loc))
-      ck2.manifest().map(_._1) shouldBe Seq("s_old", "s_new")
-    } finally spark.sql(s"DROP NAMESPACE IF EXISTS $ns CASCADE")
-  }
-
   it should "run end-to-end on an Iceberg catalog when the runtime jar is present (auto-skipped otherwise)" in {
     val icebergPresent =
       try { Class.forName("org.apache.iceberg.spark.SparkCatalog"); true }

@@ -184,35 +184,6 @@ class IncrementalImageDedupSpec extends AnyFlatSpec with Matchers with SparkTest
     ex.getMessage should include("partial absorb of import 'x9'")
   }
 
-  it should "heal a complete-but-unmarked legacy generation instead of double-absorbing" in {
-    // legacy copy-on-write absorbs committed a FULL annotated_g<N> table
-    // last with no marker; a crash before the marker left the generation
-    // complete but unmarked, and re-running absorb used to union the delta
-    // AGAIN as N+1 (advisor finding). Reproduce that store shape via
-    // compactGenerations (full artifacts at g1 = the legacy layout) plus a
-    // dropped marker, then verify absorb heals rather than doubles.
-    val dir = java.nio.file.Files.createTempDirectory("inc_heal").toString
-    val d1 = all.where(idNum % 20 === 18).localCheckpoint()
-    val c0 = ImageDedupPipeline.runDirect(spark, corpus).localCheckpoint()
-    val st = new StageCheckpoint(spark, dir)
-    IncrementalImageDedup.run(spark, corpus, c0, d1, st, "h1").count()
-    IncrementalImageDedup.absorb(spark, st, "h1") shouldBe 1
-    IncrementalImageDedup.compactGenerations(st) shouldBe 1
-    val bands1 = IncrementalImageDedup.corpusBands(new StageCheckpoint(spark, dir)).count()
-    val st2 = new StageCheckpoint(spark, dir)
-    st2.dropStage("inc_corpus_gen_g1")
-    // drop the delta stages too: a true legacy store has only full tables
-    Seq("inc_corpus_annotated_d1", "inc_corpus_shingles_d1", "inc_corpus_bands_d1",
-      "inc_corpus_grams_d1", "inc_corpus_phchunks_d1", "inc_corpus_src_d1")
-      .foreach(st2.dropStage)
-    // the annotated fallback may report gen 1 here — the old double-absorb trap
-    IncrementalImageDedup.absorb(spark, new StageCheckpoint(spark, dir), "h1") shouldBe 1
-    val st3 = new StageCheckpoint(spark, dir)
-    IncrementalImageDedup.latestGen(st3) shouldBe 1
-    st3.isDone("inc_corpus_gen_g1") shouldBe true // marker healed
-    IncrementalImageDedup.corpusBands(st3).count() shouldBe bands1
-  }
-
   it should "equal a full re-run for RANDOM corpus/delta splits (property)" in {
     // the planted %20 splits always put exact-dup classes wholly on one
     // side; random splits exercise classes straddling the boundary,
@@ -299,54 +270,6 @@ class IncrementalImageDedupSpec extends AnyFlatSpec with Matchers with SparkTest
     out3 shouldBe full
   }
 
-  it should "heal ALL marker-less generations of a multi-generation legacy store" in {
-    // a 2-generation legacy store (full artifacts at g1 AND g2, no
-    // markers, no delta stages — the pre-marker copy-on-write layout).
-    // Absorbing a NEW import must heal markers for BOTH generations:
-    // healing only the top one leaves a hole at g1, and once markers
-    // become authoritative the probe chain would stop there, making every
-    // later generation's delta invisible (review finding).
-    val dir = java.nio.file.Files.createTempDirectory("inc_heal_multi").toString
-    val d1 = all.where(idNum % 20 === 18).localCheckpoint()
-    val d2 = all.where(idNum % 20 === 19).localCheckpoint()
-    val d3 = SyntheticImages.generate(spark, n + 100L).toDF()
-      .where(idNum >= n).localCheckpoint()
-    val c0 = ImageDedupPipeline.runDirect(spark, corpus).localCheckpoint()
-    val st = new StageCheckpoint(spark, dir)
-    val out1 = IncrementalImageDedup.run(spark, corpus, c0, d1, st, "m1").localCheckpoint()
-    out1.count()
-    IncrementalImageDedup.absorb(spark, st, "m1") shouldBe 1
-    IncrementalImageDedup.compactGenerations(st) shouldBe 1
-    val corpus2 = corpus.unionByName(d1).localCheckpoint()
-    val st2 = new StageCheckpoint(spark, dir)
-    val out2 = IncrementalImageDedup.run(spark, corpus2, out1, d2, st2, "m2").localCheckpoint()
-    out2.count()
-    IncrementalImageDedup.absorb(spark, st2, "m2") shouldBe 2
-    IncrementalImageDedup.compactGenerations(st2) shouldBe 2
-    // strip to the legacy layout: markers and delta stages gone
-    val st3 = new StageCheckpoint(spark, dir)
-    Seq("inc_corpus_gen_g1", "inc_corpus_gen_g2").foreach(st3.dropStage)
-    Seq("annotated", "shingles", "bands", "grams", "phchunks", "src").foreach { b =>
-      Seq(1, 2).foreach(g => st3.dropStage(s"inc_corpus_${b}_d$g"))
-    }
-    IncrementalImageDedup.latestGen(new StageCheckpoint(spark, dir)) shouldBe 2
-
-    // absorb a THIRD (new) import on top of the legacy store
-    val corpus3 = corpus2.unionByName(d2).localCheckpoint()
-    val st4 = new StageCheckpoint(spark, dir)
-    val out3 = IncrementalImageDedup.run(spark, corpus3, out2, d3, st4, "m3").localCheckpoint()
-    out3.count()
-    val bandsBefore = IncrementalImageDedup.corpusBands(st4).count()
-    IncrementalImageDedup.absorb(spark, st4, "m3") shouldBe 3
-    val st5 = new StageCheckpoint(spark, dir)
-    // markers healed for g1 and g2, so the probe chain reaches g3 and the
-    // absorbed delta is visible in the corpus view
-    st5.isDone("inc_corpus_gen_g1") shouldBe true
-    st5.isDone("inc_corpus_gen_g2") shouldBe true
-    IncrementalImageDedup.latestGen(st5) shouldBe 3
-    IncrementalImageDedup.corpusBands(st5).count() should be > bandsBefore
-  }
-
   it should "fail loudly when the passed corpus does not match the staged fingerprint" in {
     val dir = java.nio.file.Files.createTempDirectory("inc_fprint").toString
     val d1 = all.where(idNum % 20 === 18).localCheckpoint()
@@ -363,6 +286,17 @@ class IncrementalImageDedupSpec extends AnyFlatSpec with Matchers with SparkTest
         new StageCheckpoint(spark, dir), "d2")
     }
     ex.getMessage should include("fingerprint mismatch")
+  }
+
+  it should "import into an empty corpus exactly as a full run over the delta alone" in {
+    // with nothing to pair against, only the delta×delta leg produces
+    // candidates — it must be the full run's own candidate stages
+    val noClusters = corpus.select(col("image_id"), col("image_id").as("cluster_id")).limit(0)
+    val inc = IncrementalImageDedup.runDirect(spark, corpus.limit(0), noClusters, delta)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val full = ImageDedupPipeline.runDirect(spark, delta)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    inc shouldBe full
   }
 
   it should "achieve recall and precision 1.0 against the planted truth" in {
