@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.internal.Logging
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Connected components over an undirected edge DataFrame — the clustering
@@ -11,16 +12,18 @@ import org.apache.spark.sql.functions._
   * Algorithm: alternating large-star / small-star (Kiveris et al.,
   * "Connected Components in MapReduce and Beyond", SoCC'14) expressed as
   * DataFrame joins — no GraphX (north rule), no driver-side graph. Converges
-  * in O(log^2 n) rounds; every round is two shuffles (groupBy + join) and is
+  * in O(log^2 n) rounds, each two star passes of one exchange each,
   * `localCheckpoint`ed to truncate lineage, which is what survives a
-  * 10^12-edge input on a real cluster (iterative joins without checkpoints
-  * blow up the plan).
+  * 10^12-edge input on a real cluster. The loop stops at the first star
+  * forest ([[isStarForest]]), the fixpoint, with no confirming round. A
+  * round is several Spark jobs: under AQE (on by default) even a lazy
+  * `localCheckpoint(false)` runs each shuffle map stage of its plan at once.
   *
   * Works for any orderable id type (long doc ids, string image ids): min is
   * the column type's native ordering, so results are comparable with a SQL
   * oracle computing the same min-label closure.
   */
-object ConnectedComponents {
+object ConnectedComponents extends Logging {
 
   /** @param edges (a, b) pairs, same orderable type; self-loops/dups allowed.
     * @param nodes optional (id) universe — rows with no edges become
@@ -35,13 +38,12 @@ object ConnectedComponents {
     *              store. Same single-writer/one-namespace-per-input contract
     *              as every StageStore use: resuming against different input
     *              edges serves stale state.
-    * @return (id, cluster_id) with cluster_id = min id of the component.
-    */
-  /** @param edgesCanonical the caller GUARANTEES edges are already
+    * @param edgesCanonical the caller GUARANTEES edges are already
     *        distinct with a < b (e.g. SkewSalting pair outputs) — skips
     *        the initial normalize+distinct pass (one exchange + one scan).
     *        Passing true for non-canonical edges yields wrong clusters;
-    *        leave false when unsure. */
+    *        leave false when unsure.
+    * @return (id, cluster_id) with cluster_id = min id of the component. */
   def run(spark: SparkSession, edges: DataFrame, nodes: Option[DataFrame] = None,
           maxIter: Int = 50,
           store: Option[graft.pipeline.StageStore] = None,
@@ -60,8 +62,6 @@ object ConnectedComponents {
       (1 to maxIter).filter(i => st.isDone(s"cc_edges_$i")).lastOption.getOrElse(0)
     }.getOrElse(0)
 
-    // lazy localCheckpoint: the checksum aggregation doubles as the
-    // materializing action — one driver job per iteration, not two
     var e =
       if (startIter > 0)
         // isDone just returned true, so compute is never forced
@@ -74,24 +74,21 @@ object ConnectedComponents {
         .distinct()
         .localCheckpoint(false)
 
-    var sig = checksum(e)
-    var converged = sig._1 == 0L
+    // The input is always stepped (never probed first); a resumed iterate
+    // is already one step in, so it is tested before stepping again.
+    var converged = startIter > 0 && isStarForest(e)
     var iter = startIter
     while (!converged && iter < maxIter) {
       val stepped = smallStar(largeStar(e))
       iter += 1
-      val next = store match {
+      e = store match {
         case Some(st) if iter % checkpointEvery == 0 =>
           st.stage(s"cc_edges_$iter")(stepped) // reliable commit replaces localCheckpoint
         case _ => stepped.localCheckpoint(false)
       }
-      val nextSig = checksum(next)
-      converged = nextSig == sig
-      sig = nextSig
-      e = next
+      converged = isStarForest(e)
     }
-    if (sys.props.contains("graft.cc.debug"))
-      System.err.println(s"[cc] converged after ${iter - startIter} iterations")
+    logInfo(s"connected components: ${iter - startIter} iterations after resuming at $startIter")
     // Fail loudly rather than emit wrong clusters: the star extraction below
     // is only correct at the fixpoint. 50 rounds covers graphs far beyond
     // any realistic dedup input (convergence is O(log^2 n) rounds).
@@ -99,16 +96,17 @@ object ConnectedComponents {
       s"connected components did not converge within $maxIter iterations; " +
         "raise maxIter — emitting non-fixpoint stars would be incorrect")
 
-    // At fixpoint edges form stars (member, root=min of component).
-    val stars = e.select(col("b").as("id"), col("a").as("cluster_id"))
-      .union(e.select(col("a").as("id"), col("a").as("cluster_id")))
-      .distinct()
+    // At the fixpoint every leaf b has exactly one edge, to its root a (the
+    // component's min), and roots are never leaves: (b → a) needs no
+    // distinct, and a node that is no leaf is its own root.
+    val leaves = e.select(col("b").as("id"), col("a").as("cluster_id"))
     nodes match {
       case Some(n) =>
         n.select(col("id")).distinct()
-          .join(stars, Seq("id"), "left")
+          .join(leaves, Seq("id"), "left")
           .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"))
-      case None => stars
+      case None =>
+        leaves.union(e.select(col("a").as("id"), col("a").as("cluster_id")).distinct())
     }
   }
 
@@ -126,7 +124,10 @@ object ConnectedComponents {
     // ReuseExchange). Previously the aggregate and the join each shuffled
     // the neighbor table separately (guide §2.4: two operations keyed the
     // same way share one exchange).
-    val nbrs = e.union(e.select(col("b").as("a"), col("a").as("b")))
+    // each edge is read once and emitted both ways: a union of two reads
+    // of a not yet materialized checkpoint computes it twice, concurrently
+    val nbrs = e.select(inline(array(struct(col("a"), col("b")),
+        struct(col("b").as("a"), col("a").as("b")))))
       .repartition(col("a"))
     val m = nbrs.groupBy(col("a").as("u"))
       .agg(min(col("b")).as("mn"))
@@ -153,11 +154,16 @@ object ConnectedComponents {
       .distinct()
   }
 
-  /** Cheap order-insensitive convergence signature: (count, xor of row
-    * hashes) — overflow-free under ANSI mode; avoids a full except() pair
-    * per iteration. */
-  private def checksum(e: DataFrame): (Long, Long) = {
-    val r = e.agg(count(lit(1)), bit_xor(xxhash64(col("a"), col("b")))).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
+  /** The fixpoint test: `e` (a < b, as every star pass emits) is a star
+    * forest iff every `b` has exactly one edge and no `a` is also a `b`.
+    * One grouped aggregate finds the leaves (`up` > 0) with a second edge
+    * end; each of its partitions reports only whether it holds one, which
+    * spares a global count's second exchange. */
+  private def isStarForest(e: DataFrame): Boolean =
+    !e.select(inline(array(struct(col("a").as("id"), lit(0L).as("leaf")),
+        struct(col("b").as("id"), lit(1L).as("leaf")))))
+      .groupBy("id").agg(sum("leaf").as("up"), count(lit(1)).as("deg"))
+      .where(col("up") > 0L && col("deg") > 1L)
+      .mapPartitions(rows => Iterator.single(rows.hasNext))(Encoders.scalaBoolean)
+      .collect().contains(true)
 }

@@ -45,9 +45,11 @@ object ImageDedupPipeline {
     runImpl(spark, input, checkpoint)
 
   /** Bench/throughput run: no stage snapshots — multiply-consumed
-    * intermediates are lazily localCheckpoint'ed, everything else stays a
-    * lazy plan (recompute-over-store; on a real cluster the input comes
-    * from a table, not a generator). */
+    * intermediates are localCheckpoint'ed, everything else stays a lazy
+    * plan (recompute-over-store; on a real cluster the input comes from a
+    * table, not a generator). `localCheckpoint(false)` defers only the
+    * final stage: under AQE (on by default) the call itself runs every
+    * shuffle map stage of its plan as a job on the spot. */
   def runDirect(spark: SparkSession, input: DataFrame): DataFrame = {
     val reuse = Set("s1_annotated", "s2_shingles", "s6_verified_edges")
     runImpl(spark, input, new StageStore {
@@ -112,44 +114,55 @@ object ImageDedupPipeline {
       .select(col("id"), col("bucket"))
   }
 
-  /** Verify ladder (SURVEY §2 B9) over row-level candidate pairs:
-    * caption criterion (equality OR shingle-Jaccard ≥ τ OR shared L-gram,
-    * cheap → expensive so codegen short-circuits) AND image criterion
-    * (identical bytes OR phash Hamming ≤ max AND decoded PSNR ≥ min dB).
-    * Candidate provenance is never trusted — every check recomputes from
-    * the precomputed per-caption hash arrays. `bytes` joins in ONLY for
-    * pairs past both the caption criterion and the integer Hamming
-    * prefilter, semi-joined down to candidate ids first.
+  /** Verify ladder (SURVEY §2 B9), the one both pipelines call: two rows
+    * are duplicates iff caption-near AND image-near, each criterion decided
+    * at the coarsest grain it depends on, cheap → expensive:
+    *  1. caption: exact shingle-Jaccard ≥ τ OR a shared L-gram, once per
+    *     distinct caption pair (distinct cids never share a caption within
+    *     one table; an equal caption across the import's two tables has
+    *     equal hash arrays, so it passes);
+    *  2. passing caption pairs expand to rep row pairs, once, and the
+    *     same-caption row pairs join in. Each keeps to its path: a
+    *     same-caption pair needs equal captions (a bucket hash collision
+    *     could pair two groups), an expanded one unequal captions — two
+    *     reps of one caption within Hamming ≤ max (or with equal bytes, so
+    *     equal phashes) share a phash chunk by pigeonhole, so the
+    *     same-caption path holds them and no pair passes twice;
+    *  3. image: identical bytes OR phash Hamming ≤ max on per-rep
+    *     metadata, then `bytes` of the surviving ids only, for PSNR ≥ min dB.
     *
-    * @param cand     (a, b) row-level candidate pairs
-    * @param capt     (image_id, caption, bytes_hash, phash) for every id
-    *                 that can appear in `cand`
-    * @param shByRow  (image_id, shingles, grams) routed per row (consumed
-    *                 twice — pass it localCheckpoint'ed)
-    * @param bytesTbl (image_id, bytes) */
-  private[pipeline] def verifyLadder(cand: DataFrame, capt: DataFrame,
-                                     shByRow: DataFrame, bytesTbl: DataFrame): DataFrame = {
-    val withMeta = cand
-      .join(capt.select(col("image_id").as("a"), col("caption").as("cap_a"),
-        col("bytes_hash").as("bh_a"), col("phash").as("ph_a")), "a")
-      .join(capt.select(col("image_id").as("b"), col("caption").as("cap_b"),
-        col("bytes_hash").as("bh_b"), col("phash").as("ph_b")), "b")
-      .join(shByRow.select(col("image_id").as("a"), col("shingles").as("sh_a"),
-        col("grams").as("gr_a")), Seq("a"), "left")
-      .join(shByRow.select(col("image_id").as("b"), col("shingles").as("sh_b"),
-        col("grams").as("gr_b")), Seq("b"), "left")
-
+    * @param capPairs  (a, b) caption ids, never in both orientations; `a`
+    *                  resolves in `shA`/`membersA`, `b` in `shB`/`membersB`
+    * @param shA       (id, shingles, grams) per caption id
+    * @param membersA  (cid, image_id) exact-class reps per caption id
+    * @param samePairs (a, b) distinct rep row pairs within caption groups
+    * @param reps      (image_id, caption, bytes_hash, phash) per rep
+    * @param bytesTbl  (image_id, bytes) */
+  private[pipeline] def verifyLadder(capPairs: DataFrame, shA: DataFrame, shB: DataFrame,
+                                     membersA: DataFrame, membersB: DataFrame,
+                                     samePairs: DataFrame, reps: DataFrame,
+                                     bytesTbl: DataFrame): DataFrame = {
+    def hashes(sh: DataFrame, side: String) = sh.select(col("id").as(side),
+      col("shingles").as(s"sh_$side"), col("grams").as(s"gr_$side"))
     val interSz = size(array_intersect(col("sh_a"), col("sh_b"))).cast("long")
-    val captionOk = (col("cap_a") === col("cap_b")) ||
-      (col("sh_a").isNotNull && col("sh_b").isNotNull &&
+    val captionNear = (col("sh_a").isNotNull && col("sh_b").isNotNull &&
         graft.functions.TextHash.jaccardGe(interSz,
           size(col("sh_a")).cast("long"), size(col("sh_b")).cast("long"))) ||
       coalesce(arrays_overlap(col("gr_a"), col("gr_b")), lit(false))
+    val captionPass = capPairs.select("a", "b").distinct()
+      .join(hashes(shA, "a"), "a").join(hashes(shB, "b"), "b")
+      .where(captionNear)
 
-    val captionPass = withMeta.where(captionOk)
+    val rows = expand(captionPass, membersA, membersB).withColumn("same", lit(false))
+      .unionByName(samePairs.select(col("a"), col("b"), lit(true).as("same")))
+    def meta(side: String) = reps.select(col("image_id").as(side), col("caption").as(s"cap_$side"),
+      col("bytes_hash").as(s"bh_$side"), col("phash").as(s"ph_$side"))
+    // consumed twice (the surviving ids and the PSNR join); under AQE this
+    // checkpoint runs every shuffle map stage of its plan at once
+    val imagePass = rows.join(meta("a"), "a").join(meta("b"), "b")
+      .where(col("same") === (col("cap_a") === col("cap_b")))
       .withColumn("bytes_eq", col("bh_a") === col("bh_b"))
-      .where(col("bytes_eq") ||
-        expr(s"bit_count(ph_a ^ ph_b) <= $HammingMax"))
+      .where(col("bytes_eq") || expr(s"bit_count(ph_a ^ ph_b) <= $HammingMax"))
       .select(col("a"), col("b"), col("bytes_eq"))
       .localCheckpoint(false)
 
@@ -157,13 +170,11 @@ object ImageDedupPipeline {
     // that appear in a surviving candidate pair carry their bytes into the
     // PSNR join (otherwise the full binary column is shuffled twice to
     // serve a few thousand pairs — pure memory-bandwidth burn)
-    val candIds = captionPass.select(col("a").as("image_id"))
-      .unionByName(captionPass.select(col("b").as("image_id")))
-      .distinct()
+    val candIds = imagePass.select(explode(array(col("a"), col("b"))).as("image_id")).distinct()
     val neededBytes = bytesTbl.join(candIds, Seq("image_id"), "left_semi")
       .localCheckpoint(false)
 
-    captionPass
+    imagePass
       .join(neededBytes.select(col("image_id").as("a"), col("bytes").as("bytes_a")), "a")
       .join(neededBytes.select(col("image_id").as("b"), col("bytes").as("bytes_b")), "b")
       .where(col("bytes_eq") ||
@@ -199,12 +210,6 @@ object ImageDedupPipeline {
       .join(membersB.select(col("cid").as("b"), col("image_id").as("ib")), "b")
       .select(least(col("ia"), col("ib")).as("a"), greatest(col("ia"), col("ib")).as("b"))
 
-  /** Shingle/gram hash arrays routed row → cid → arrays (computed once per
-    * caption, never per pair): (image_id, shingles, grams). */
-  private[pipeline] def routeShingles(members: DataFrame, sh: DataFrame): DataFrame =
-    members.join(sh.select(col("id").as("cid"), col("shingles"), col("grams")), "cid")
-      .select(col("image_id"), col("shingles"), col("grams"))
-
   /** Composable corpus fingerprint: (row count, xor of image_id hashes).
     * Both components compose under disjoint union, so an absorb extends a
     * staged fingerprint from its delta alone, with no corpus rescan. */
@@ -217,15 +222,16 @@ object ImageDedupPipeline {
                                          fp: (Long, Long)): Unit =
     ckpt.stage(name)(spark.createDataFrame(Seq(fp)).toDF("cnt", "xh"))
 
-  /** Candidate stages s3–s5 over ONE annotated table → row-level pairs
-    * (a < b, src). The full run applies them to its whole input; an import
-    * applies them to its delta alone (the delta×delta leg, staged under the
-    * import's namespace), so both pipelines block with one definition.
+  /** Candidate stages s3–s5 over ONE annotated table → (caption-id pairs
+    * of s3 ∪ s4, rep row pairs of s5), the two candidate inputs of
+    * [[verifyLadder]]. The full run applies them to its whole input; an
+    * import applies them to its delta alone (the delta×delta leg, staged
+    * under the import's namespace), so both pipelines block with one
+    * definition.
     *
-    * s3/s4 are caption-level (MinHash-LSH bands, shared L-token run) and
-    * expand to rows through the member map; near-caption pairs between two
-    * viral-size captions would inflate that expansion, but the verify
-    * ladder's Hamming filter runs right after it.
+    * s3/s4 are caption-level (MinHash-LSH bands, shared L-token run); the
+    * ladder decides their caption criterion per caption pair and expands
+    * only the passing ones to rows.
     *
     * s5: phash chunk buckets WITHIN caption groups (composite blocking
     * key, cf. the reference's multi-scheme blocking). The dup semantics
@@ -238,21 +244,18 @@ object ImageDedupPipeline {
     * groups are keyed by cid, so the blocking key never shuffles the
     * caption STRING. The standalone image-only operator remains
     * SimHashNearDup. */
-  private[pipeline] def candidates(annotated: DataFrame, ckpt: StageStore): DataFrame = {
+  private[pipeline] def candidates(annotated: DataFrame, ckpt: StageStore): (DataFrame, DataFrame) = {
     val capReps = capRepsOf(annotated)
     val lshPairs = ckpt.stage("s3_lsh_pairs")(MinHashLsh.candidatePairs(bandsOf(capReps)))
     val substrPairs = ckpt.stage("s4_substr_pairs") {
       TextAnalysis.substringPairs(capReps, "cid", "caption")
     }
-    val members = membersOf(annotated)
-    val textPairs = expand(lshPairs, members, members).withColumn("src", lit("minhash"))
-      .unionByName(expand(substrPairs, members, members).withColumn("src", lit("substring")))
     val imgPairs = ckpt.stage("s5_img_pairs") {
       SkewSalting.selfJoinPairs(phashChunks(repsOf(annotated), col("cid")),
           Seq("bucket"), "id", SaltCap, SaltFanout)
         .withColumn("src", lit("phash"))
     }
-    textPairs.unionByName(imgPairs)
+    (lshPairs.unionByName(substrPairs), imgPairs.select("a", "b"))
   }
 
   private def runImpl(spark: SparkSession, input: DataFrame, ckpt: StageStore): DataFrame = {
@@ -267,16 +270,13 @@ object ImageDedupPipeline {
       stageFingerprint(spark, ckpt, "inc_corpus_fprint", fingerprint(input))
     val starEdges = ckpt.stage("s1_star_edges")(starEdgesOf(annotated))
     val shingleTbl = ckpt.stage("s2_shingles")(shingleGramTable(capRepsOf(annotated)))
-    val pairs = candidates(annotated, ckpt)
+    val (capPairs, samePairs) = candidates(annotated, ckpt)
 
     // ---- stage: verify — caption criterion AND image criterion
     val verified = ckpt.stage("s6_verified_edges") {
-      val cand = pairs.select("a", "b").dropDuplicates("a", "b")
-      val shByRow = routeShingles(membersOf(annotated), shingleTbl)
-        .localCheckpoint(false) // joined twice (a and b side)
-      verifyLadder(cand,
+      val members = membersOf(annotated)
+      verifyLadder(capPairs, shingleTbl, shingleTbl, members, members, samePairs,
         repsOf(annotated).select(col("image_id"), col("caption"), col("bytes_hash"), col("phash")),
-        shByRow,
         input.select(col("image_id"), col("bytes")))
     }
 

@@ -205,13 +205,16 @@ object IncrementalImageDedup {
       .filter(ckpt.isDone).map { n => ckpt.dropStage(n); n }
   }
 
-  /** Bench/test run without durable snapshots: multiply-consumed stages are
-    * lazily localCheckpoint'ed, the rest stay lazy plans. */
+  private val DefaultImportId = "i0"
+
+  /** Bench/test run without durable snapshots: every stage but the final
+    * `inc_clusters` is localCheckpoint'ed; the result stays a plan, so no
+    * block of it outlives the call. */
   def runDirect(spark: SparkSession, corpus: DataFrame, corpusClusters: DataFrame,
                 delta: DataFrame): DataFrame =
     run(spark, corpus, corpusClusters, delta, new StageStore {
       def stage(name: String)(compute: => DataFrame): DataFrame =
-        if (name == "inc_clusters") compute else compute.localCheckpoint(false)
+        if (name == s"${DefaultImportId}_inc_clusters") compute else compute.localCheckpoint(false)
     })
 
   /** @param corpus         full prior table (input_hint schema)
@@ -229,7 +232,7 @@ object IncrementalImageDedup {
     *                       externally (e.g. Iceberg snapshot pinning)
     * @return (image_id, cluster_id) for every corpus AND delta row */
   def run(spark: SparkSession, corpus: DataFrame, corpusClusters: DataFrame,
-          delta: DataFrame, ckpt: StageStore, importId: String = "i0",
+          delta: DataFrame, ckpt: StageStore, importId: String = DefaultImportId,
           fingerprintCheck: Boolean = true): DataFrame = {
 
     // per-import namespace for every delta-dependent stage
@@ -336,42 +339,33 @@ object IncrementalImageDedup {
     if (freshCorpusStaging && ckpt.isDone("inc_corpus_bands") && !ckpt.isDone(fpName))
       stageFingerprint(spark, ckpt, fpName, fingerprint(corpus))
 
-    // ---- corpus×delta candidates, as (least, greatest) pairs like every
-    // other leg so one dropDuplicates spans all of them. Image buckets key
-    // on the caption STRING hash (per-side cids are not comparable).
+    // ---- corpus×delta candidates: caption-id pairs (a = corpus cid,
+    // b = delta cid) from the band and L-gram joins, and rep row pairs
+    // from the phash chunk join, which keys on the caption STRING hash
+    // (per-side cids are not comparable) and so pairs one caption's rows.
     val capCross = imp.stage("inc_cap_cross_pairs") {
       SkewSalting.crossJoinPairs(bandC, foldedBands(capRepsD),
           Seq("bucket"), "id", SaltCap, SaltFanout, leftBucketed = bandsBk)
         .unionByName(SkewSalting.crossJoinPairs(gramC, gramsOf(capRepsD),
           Seq("gram_hash"), "id", SaltCap, SaltFanout, leftBucketed = gramsBk))
     }
-    val crossRows = expand(capCross, memberC, memberD)
     val phCross = SkewSalting.crossJoinPairs(chunkC, phashChunks(repsD, col("caption")),
         Seq("bucket"), "id", SaltCap, SaltFanout, leftBucketed = chunksBk)
       .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
     // ---- delta×delta candidates: the full run's stages s3–s5, on the delta
-    val selfD = candidates(annD, imp).select("a", "b")
+    val (capSelfD, sameSelfD) = candidates(annD, imp)
 
-    // ---- ONE verify ladder over all candidates, with per-side metadata
-    // unioned (ids are globally unique) ----
+    // ---- the full run's verify ladder over both legs: every caption pair
+    // has its `b` in the delta, its `a` on either side (ids are globally
+    // unique, so the corpus and delta tables union per side)
     val verified = imp.stage("inc_verified_edges") {
-      val cand = crossRows.unionByName(phCross).unionByName(selfD)
-        .dropDuplicates("a", "b")
-        .localCheckpoint(false) // consumed by candIds AND the ladder
-      val capt = repsC.unionByName(repsD)
-        .select(col("image_id"), col("caption"), col("bytes_hash"), col("phash"))
-      // the ladder only consults rows that appear in a candidate pair —
-      // semi-filter BEFORE the member⋈shingle join, otherwise this
-      // materializes a corpus-wide join on every import
-      val candIds = cand.select(col("a").as("image_id"))
-        .unionByName(cand.select(col("b").as("image_id"))).distinct()
-      def routed(member: DataFrame, sh: DataFrame): DataFrame =
-        routeShingles(member.join(candIds, Seq("image_id"), "left_semi"), sh)
-      val shByRow = routed(memberC, shC).unionByName(routed(memberD, shD))
-        .localCheckpoint(false)
-      val bytesTbl = corpus.select(col("image_id"), col("bytes"))
-        .unionByName(delta.select(col("image_id"), col("bytes")))
-      verifyLadder(cand, capt, shByRow, bytesTbl)
+      verifyLadder(capCross.unionByName(capSelfD),
+        shC.unionByName(shD), shD, memberC.unionByName(memberD), memberD,
+        phCross.unionByName(sameSelfD),
+        repsC.unionByName(repsD)
+          .select(col("image_id"), col("caption"), col("bytes_hash"), col("phash")),
+        corpus.select(col("image_id"), col("bytes"))
+          .unionByName(delta.select(col("image_id"), col("bytes"))))
     }
     // the verified-edges stage commit drained every candidate pair plan —
     // release the corpus slices the leftBucketed cross joins cached

@@ -20,4 +20,15 @@ object SparkTestSession {
 
 trait SparkTestBase {
   lazy val spark: SparkSession = SparkTestSession.spark
+
+  /** Runs `body`, then unpersists every RDD it persisted (checkpointed
+    * inputs and a pipeline's checkpointed intermediates), so the blocks of
+    * a large run do not stay on the shared session's heap for later suites. */
+  def releasing[T](body: => T): T = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try body
+    finally spark.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if !before(id) => rdd }
+      .foreach(_.unpersist(blocking = true))
+  }
 }

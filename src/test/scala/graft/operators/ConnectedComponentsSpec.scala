@@ -50,15 +50,32 @@ class ConnectedComponentsSpec extends AnyFlatSpec with Matchers with SparkTestBa
 
   it should "match BFS on random graphs (incl. long chains)" in {
     val rnd = new Random(7)
-    for (trial <- 1 to 5) {
-      val n = 60
-      val nodes = (0L until n).toSeq
+    val n = 60
+    val nodes = (0L until n).toSeq
+    val random = (1 to 5).map { trial =>
       val chain = (0L until 20L).sliding(2).map(s => (s(0), s(1))).toSeq
       val rand = Seq.fill(40)((rnd.nextInt(n.toInt).toLong, rnd.nextInt(n.toInt).toLong))
         .filter { case (a, b) => a != b }
-      val edges = chain ++ rand
-      withClue(s"trial $trial") {
-        run(edges, Some(nodes)) shouldBe bfs(edges, nodes)
+      s"trial $trial" -> (chain ++ rand)
+    }
+    // both directions of an 8-clique, one direction of a 6-clique
+    val cliques = (for (a <- 0L until 8L; b <- 0L until 8L if a != b) yield (a, b)) ++
+      (for (a <- 20L until 26L; b <- a + 1 until 26L) yield (b, a))
+    // stars rooted at their min, and one whose center (45) is not its min
+    val stars = (1L until 10L).map(v => (0L, v)) ++ (31L until 40L).map(v => (v, 30L)) ++
+      Seq(41L, 46L, 47L, 59L).map(v => (45L, v))
+    val shaped = Seq("cliques" -> cliques, "stars" -> stars,
+      "cliques and stars bridged" -> (cliques ++ stars ++ Seq((7L, 45L), (25L, 39L))))
+    // zero-padded string ids order like the longs they encode
+    def sid(x: Long): String = f"v$x%03d"
+    for (((name, edges), i) <- (random ++ shaped).zipWithIndex) withClue(name) {
+      val want = bfs(edges, nodes)
+      run(edges, Some(nodes)) shouldBe want
+      if (i == 0 || i >= random.size) {
+        val strEdges = edges.map { case (a, b) => (sid(a), sid(b)) }.toDF("a", "b")
+        ConnectedComponents.run(spark, strEdges, Some(nodes.map(sid).toDF("id")))
+          .collect().map(r => r.getString(0) -> r.getString(1)).toMap shouldBe
+          want.map { case (k, v) => sid(k) -> sid(v) }
       }
     }
   }
@@ -76,6 +93,20 @@ class ConnectedComponentsSpec extends AnyFlatSpec with Matchers with SparkTestBa
       ConnectedComponents.run(spark, chain, maxIter = 1)
     }
     ex.getMessage should include("did not converge")
+  }
+
+  it should "stop at the star one round builds from a clique, with no confirming round" in {
+    val clique = for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b)
+    ConnectedComponents.run(spark, clique.toDF("a", "b"), maxIter = 1)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe
+      (1L to 5L).map(_ -> 1L).toMap
+  }
+
+  it should "return a star-forest input unchanged within one round" in {
+    val stars = Seq((1L, 2L), (1L, 3L), (4L, 5L), (4L, 6L), (4L, 9L))
+    ConnectedComponents.run(spark, stars.toDF("a", "b"), maxIter = 1)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 4L, 9L -> 4L)
   }
 
   it should "be idempotent on star output (resume safety)" in {

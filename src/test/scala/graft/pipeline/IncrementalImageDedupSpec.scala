@@ -310,4 +310,10 @@ class IncrementalImageDedupSpec extends AnyFlatSpec with Matchers with SparkTest
     recall shouldBe 1.0
     precision shouldBe 1.0
   }
+
+  it should "leave runDirect's result a plan, so none of its blocks outlive the call" in releasing {
+    val out = IncrementalImageDedup.runDirect(spark, corpus,
+      ImageDedupPipeline.runDirect(spark, corpus), delta)
+    out.queryExecution.logical should not be a[org.apache.spark.sql.execution.LogicalRDD]
+  }
 }
