@@ -109,12 +109,9 @@ object AnnEval {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the table does not depend on the core count: local[4] writes the
+    // same ANN.md as local[8] did
+    val spark = BenchUtil.session("graft-ann-eval")
 
     val regimes = Seq(("planted cos~0.99 (σ=0.15)", 0.15),
       ("planted cos~0.88 (σ=0.55)", 0.55),

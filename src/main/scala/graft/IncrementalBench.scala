@@ -12,10 +12,10 @@ import graft.pipeline.{CatalogStageCheckpoint, ImageDedupPipeline, IncrementalIm
   * delta-dependent work runs). Incremental runs pay durable parquet stage
   * writes that the full runDirect does not — the comparison is conservative.
   *
-  * Protocol hygiene (same as ScalingBench): every measured phase runs in a
-  * FRESH SparkSession — a shared JVM session accumulates localCheckpoint
-  * blocks from earlier phases and was measured to slow later phases by up
-  * to 2× (block-manager memory pressure), poisoning the comparison. The
+  * Protocol hygiene: every measured phase runs in a FRESH SparkSession —
+  * a shared JVM session accumulates localCheckpoint blocks from earlier
+  * phases and was measured to slow later phases by up to 2×
+  * (block-manager memory pressure), poisoning the comparison. The
   * prior corpus clustering is handed to the import phases as a parquet
   * table (reading it is part of the measured import, as in production).
   *
@@ -24,20 +24,20 @@ import graft.pipeline.{CatalogStageCheckpoint, ImageDedupPipeline, IncrementalIm
   * every 5th block. All keep cross-side planted dups so recall exercises
   * the cross path.
   *
-  * Usage: GRAFT_BENCH_N=1000000 GRAFT_BENCH_DELTA_PCT=5 \
-  *        SPARK_DRIVER_MEM=24g tools/run_main.sh graft.IncrementalBench
-  * Prints one JSON line.
+  * Usage: GRAFT_BENCH_N=200000 GRAFT_BENCH_DELTA_PCT=5 \
+  *        tools/run_main.sh graft.IncrementalBench
+  * Sessions come from [[BenchUtil.session]]. Prints one JSON line.
   */
 object IncrementalBench {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.get("GRAFT_BENCH_N").map(_.toLong).getOrElse(200000L)
-    val cores = sys.env.getOrElse("GRAFT_BENCH_CORES", "8").toInt
+    val cores = BenchUtil.hostCores
     val deltaPct = sys.env.getOrElse("GRAFT_BENCH_DELTA_PCT", "10").toInt
 
     val inputPath = s"/tmp/graft_scaling_input_$n"
     if (!new java.io.File(s"$inputPath/_SUCCESS").exists()) {
-      val s = session(cores)
+      val s = BenchUtil.session("graft-incremental-bench")
       try SyntheticImages.generate(s, n).toDF()
         .write.mode("overwrite").parquet(inputPath)
       finally s.stop()
@@ -57,7 +57,7 @@ object IncrementalBench {
 
     /** Run `body` in a fresh session, return (wall of the timed part, result). */
     def phase[T](label: String)(body: SparkSession => T): T = {
-      val spark = session(cores)
+      val spark = BenchUtil.session("graft-incremental-bench")
       try {
         val t0 = System.nanoTime()
         val out = body(spark)
@@ -85,7 +85,7 @@ object IncrementalBench {
     }
 
     val ckptDir = s"/tmp/graft_inc_bench_${n}_d$deltaPct"
-    deleteRecursively(new java.io.File(ckptDir))
+    BenchUtil.deleteRecursively(new java.io.File(ckptDir))
     def importPhase(label: String, importId: String): (Double, Long, Double) =
       phase(label) { s =>
         val (corpus, delta) = split(s.read.parquet(inputPath))
@@ -102,29 +102,6 @@ object IncrementalBench {
 
     val (coldSec, deltaRows, recallCold) = importPhase("inc-cold", "imp_cold")
     val (warmSec, _, recallWarm) = importPhase("inc-warm", "imp_warm")
-
-    // optional: the north rule's N-vs-4N criterion applied to the WARM
-    // import itself — one warm import per listed core count against the
-    // same store (fresh per-import namespace each, fresh session each)
-    val scalingJson = sys.env.get("GRAFT_BENCH_WARM_CORES").map { spec =>
-      val entries = spec.split(",").map(_.trim.toInt).map { c =>
-        val spark = session(c)
-        try {
-          val (corpus, delta) = split(spark.read.parquet(inputPath))
-          val t0 = System.nanoTime()
-          IncrementalImageDedup.run(spark, corpus,
-              spark.read.parquet(clustersPath), delta,
-              new StageCheckpoint(spark, ckptDir), s"imp_warm_c$c")
-            .localCheckpoint().count()
-          val wall = (System.nanoTime() - t0) / 1e9
-          System.err.println(f"[inc-bench] warm@$c%-7d $wall%.1f s")
-          (c, wall)
-        } finally spark.stop()
-      }
-      val lo = entries.minBy(_._1); val hi = entries.maxBy(_._1)
-      val eff = (lo._2 * lo._1) / (hi._2 * hi._1)
-      s""","warm_scaling":{${entries.map(e => s""""c${e._1}":${e._2}""").mkString(",")},"efficiency":$eff}"""
-    }.getOrElse("")
 
     // optional: the daily-ingest STEADY STATE (GRAFT_BENCH_ABSORB=1,
     // requires delta_pct=10 so the delta splits into two disjoint days):
@@ -144,7 +121,7 @@ object IncrementalBench {
     val absorbJson = if (sys.env.get("GRAFT_BENCH_ABSORB").contains("1") && deltaPct == 10) {
       val fixedK = sys.env.get("GRAFT_BENCH_ABSORB_FIXED").map(_.toLong)
       val dir2 = s"/tmp/graft_inc_bench_absorb_$n"
-      deleteRecursively(new java.io.File(dir2))
+      BenchUtil.deleteRecursively(new java.io.File(dir2))
       val out1Path = s"$dir2/out1_clusters"
       val idNum = expr("cast(substring(image_id, 5) as bigint)")
       def day(d: Long) = fixedK match {
@@ -209,27 +186,11 @@ object IncrementalBench {
           (System.nanoTime() - t0) / 1e9
         }
       val plainWarm = catalogWarm("plain", _ => None)
-      val bkWarm = catalogWarm("bucketed", IncrementalImageDedup.bucketSpec(cores * 4))
+      // one bucket per shuffle partition (the session has one per core)
+      val bkWarm = catalogWarm("bucketed", IncrementalImageDedup.bucketSpec(cores))
       s""","bucketed_warm":{"plain_sec":$plainWarm,"bucketed_sec":$bkWarm}"""
     } else ""
 
-    println(s"""{"bench":"incremental","n":$n,"delta_pct":$deltaPct,"delta_rows":$deltaRows,"cores":$cores,"full_sec":$fullSec,"inc_cold_sec":$coldSec,"inc_warm_sec":$warmSec,"speedup_cold":${fullSec / coldSec},"speedup_warm":${fullSec / warmSec},"recall_cold":$recallCold,"recall_warm":$recallWarm$scalingJson$absorbJson$bucketedJson}""")
+    println(s"""{"bench":"incremental","n":$n,"delta_pct":$deltaPct,"delta_rows":$deltaRows,"cores":$cores,"full_sec":$fullSec,"inc_cold_sec":$coldSec,"inc_warm_sec":$warmSec,"speedup_cold":${fullSec / coldSec},"speedup_warm":${fullSec / warmSec},"recall_cold":$recallCold,"recall_warm":$recallWarm$absorbJson$bucketedJson}""")
   }
-
-  private def session(cores: Int): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-incremental-bench")
-      .config("spark.sql.shuffle.partitions", (cores * 4).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit =
-    BenchUtil.deleteRecursively(f)
 }

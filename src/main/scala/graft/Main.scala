@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.images.SyntheticImages
 import graft.pipeline.{ImageDedupPipeline, StageCheckpoint}
@@ -17,19 +17,9 @@ object Main {
     val n = args.headOption.filter(!_.startsWith("--")).map(_.toLong).getOrElse(20000L)
     val baseDir = args.drop(1).find(!_.startsWith("--")).getOrElse("/tmp/graft_pipeline")
     val fresh = args.contains("--fresh")
-    if (fresh) deleteRecursively(new java.io.File(baseDir))
+    if (fresh) BenchUtil.deleteRecursively(new java.io.File(baseDir))
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-image-dedup")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchUtil.session("graft-image-dedup")
 
     val t0 = System.nanoTime()
     val ckpt = new StageCheckpoint(spark, baseDir)
@@ -89,10 +79,5 @@ object Main {
     val total = emitted.count()
     val hit = emitted.where(col("ga").isNotNull && col("ga") === col("gb")).count()
     (if (total == 0) 1.0 else hit.toDouble / total, total, hit)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete()
   }
 }

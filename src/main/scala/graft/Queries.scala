@@ -31,8 +31,10 @@ object Queries {
   /** Materialize a map-only query's COMPACT metric rows once before its
     * terminal sort. A global orderBy's range-partitioner sampling pass
     * re-executes its whole child, so a scan→map→sort query otherwise runs
-    * the expensive text/vector chain TWICE per action (measured via
-    * ProfileQuery: two full map passes; q64 0.83 → 0.67 s with this).
+    * the expensive text/vector chain TWICE per action (measured with a
+    * per-job listener: two full map passes; q64 0.83 → 0.67 s with this;
+    * `perfbench/run.py --workload ops_suite --queries … --trace 1` reports
+    * a query's jobs and stages).
     * The LAZY local checkpoint materializes on first use (inside the
     * timed action — nothing is precomputed), and the sort's sampling and
     * shuffle read the small metric rows back instead of recomputing. At

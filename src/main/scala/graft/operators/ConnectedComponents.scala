@@ -132,9 +132,13 @@ object ConnectedComponents extends Logging {
     val m = nbrs.groupBy(col("a").as("u"))
       .agg(min(col("b")).as("mn"))
       .select(col("u"), least(col("u"), col("mn")).as("m"))
-    nbrs.where(col("b") > col("a"))
-      .join(m, nbrs("a") === m("u"))
-      .select(least(col("b"), col("m")).as("a"), greatest(col("b"), col("m")).as("b"))
+    // `b > a` sits in the projection, not in a filter: the optimizer would
+    // push a filter on nbrs below the repartition, which then no longer
+    // matches the aggregate's, so nbrs would be shuffled, and `e` read,
+    // twice. A null `a` (b ≤ a) fails the final filter.
+    nbrs.join(m, nbrs("a") === m("u"))
+      .select(when(col("b") > col("a"), least(col("b"), col("m"))).as("a"),
+        greatest(col("b"), col("m")).as("b"))
       .where(col("a") =!= col("b"))
   }
 

@@ -262,11 +262,15 @@ object SkewSalting {
     val hot = pairable.where(col("lcount") * col("rcount") > capPairs)
       .select(keys :+ (col("lcount") >= col("rcount")).as("left_bigger"): _*)
       .localCheckpoint(false)
-    val hotKeys = hot.select(keys: _*)
     val keptR = r
 
-    val coldL = keptL.join(broadcast(hotKeys), keyCols, "left_anti")
-    val coldR = keptR.join(broadcast(hotKeys), keyCols, "left_anti")
+    // cold = no hot match. An outer join to the whole of `hot` (not an
+    // anti join to its keys) broadcasts the same table as the hot legs, so
+    // one broadcast serves all four joins and the lazy `hot` is read once.
+    def cold(side: DataFrame) = side.join(broadcast(hot), keyCols, "left_outer")
+      .where(col("left_bigger").isNull).drop("left_bigger")
+    val coldL = cold(keptL)
+    val coldR = cold(keptR)
     val coldPairs = crossPairJoin(coldL, coldR, keyCols)
 
     // hot path: per-bucket choice of which side salts vs replicates. The

@@ -390,8 +390,10 @@ object IncrementalImageDedup {
       val newEdges = verified.select("a", "b")
         .unionByName(starEdgesOf(annD))
         .localCheckpoint(false)
-      val touched = newEdges.select(col("a").as("image_id"))
-        .unionByName(newEdges.select(col("b").as("image_id"))).distinct()
+      // one read of the lazy checkpoint (a union of two selects would
+      // compute its partitions twice, in two concurrent tasks)
+      val touched = newEdges.select(explode(array(col("a"), col("b"))).as("image_id"))
+        .distinct()
       val touchedClusters = corpusClusters
         .join(touched, Seq("image_id"), "left_semi")
         .select(col("cluster_id")).distinct()
