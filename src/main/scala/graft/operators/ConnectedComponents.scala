@@ -16,8 +16,17 @@ import org.apache.spark.sql.functions._
   * `localCheckpoint`ed to truncate lineage, which is what survives a
   * 10^12-edge input on a real cluster. The loop stops at the first star
   * forest ([[isStarForest]]), the fixpoint, with no confirming round. A
-  * round is several Spark jobs: under AQE (on by default) even a lazy
-  * `localCheckpoint(false)` runs each shuffle map stage of its plan at once.
+  * round is 3 Spark jobs plus the star test's 2: under AQE (on by default)
+  * even a lazy `localCheckpoint(false)` runs each shuffle map stage of its
+  * plan at once, one per star pass and one for small-star's distinct.
+  * Each star pass joins an aggregate back to the exchange it was computed
+  * from, and so does the final leaves join to the node universe; the
+  * three are hinted to a sort-merge join. Unhinted, AQE turned each into
+  * a broadcast of the aggregate at small sizes (one more job per pass,
+  * its build side flipping from run to run), while at scale they are
+  * shuffle joins anyway: the hint gives every size the large-input plan.
+  * An iterate's predecessor is released once the iterate has been read
+  * by its star test, so only the iterate the result reads stays cached.
   *
   * Works for any orderable id type (long doc ids, string image ids): min is
   * the column type's native ordering, so results are comparable with a SQL
@@ -81,12 +90,16 @@ object ConnectedComponents extends Logging {
     while (!converged && iter < maxIter) {
       val stepped = smallStar(largeStar(e))
       iter += 1
-      e = store match {
+      val next = store match {
         case Some(st) if iter % checkpointEvery == 0 =>
           st.stage(s"cc_edges_$iter")(stepped) // reliable commit replaces localCheckpoint
         case _ => stepped.localCheckpoint(false)
       }
-      converged = isStarForest(e)
+      converged = isStarForest(next)
+      // the star test computed every block of `next` and so cut its
+      // lineage: nothing reads `e` any more
+      release(e)
+      e = next
     }
     logInfo(s"connected components: ${iter - startIter} iterations after resuming at $startIter")
     // Fail loudly rather than emit wrong clusters: the star extraction below
@@ -103,7 +116,7 @@ object ConnectedComponents extends Logging {
     nodes match {
       case Some(n) =>
         n.select(col("id")).distinct()
-          .join(leaves, Seq("id"), "left")
+          .join(leaves.hint("merge"), Seq("id"), "left")
           .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"))
       case None =>
         leaves.union(e.select(col("a").as("id"), col("a").as("cluster_id")).distinct())
@@ -136,7 +149,7 @@ object ConnectedComponents extends Logging {
     // push a filter on nbrs below the repartition, which then no longer
     // matches the aggregate's, so nbrs would be shuffled, and `e` read,
     // twice. A null `a` (b ≤ a) fails the final filter.
-    nbrs.join(m, nbrs("a") === m("u"))
+    nbrs.join(m.hint("merge"), nbrs("a") === m("u"))
       .select(when(col("b") > col("a"), least(col("b"), col("m"))).as("a"),
         greatest(col("b"), col("m")).as("b"))
       .where(col("a") =!= col("b"))
@@ -151,12 +164,18 @@ object ConnectedComponents extends Logging {
       .where(col("u") =!= col("v"))
       .repartition(col("u"))
     val m = oriented.groupBy("u").agg(min(col("v")).as("m"))
-    oriented.join(m, "u")
+    oriented.join(m.hint("merge"), "u")
       .select(least(col("v"), col("m")).as("a"), greatest(col("v"), col("m")).as("b"))
       .where(col("a") =!= col("b"))
       .union(m.select(col("m").as("a"), col("u").as("b")))
       .distinct()
   }
+
+  /** Drops the blocks of a `localCheckpoint`ed iterate (CC's own: its
+    * input checkpoint or a round's); a stage served from a durable store
+    * holds none. No job. */
+  private def release(e: DataFrame): Unit = Some(e.queryExecution.logical).collect {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false) }
 
   /** The fixpoint test: `e` (a < b, as every star pass emits) is a star
     * forest iff every `b` has exactly one edge and no `a` is also a `b`.

@@ -14,8 +14,8 @@ import graft.images.ImageCodec
   * (R:.../deduplication/{Blocking,DuplicateCandidates}.scala, SURVEY §3.1)
   * with one Catalyst-planned Dataset dataflow:
   *
-  *   scan ─┬ caption: shingle→MinHash→LSH bands          ┐
-  *         ├ caption: L-gram substring pass                ├ salted pair joins
+  *   scan ─┬ caption: shingle→MinHash→LSH bands          ┐ one (scheme, bucket)
+  *         ├ caption: L-gram substring pass                ├ salted self-join
   *         ├ image: (caption, phash-chunk) composite block ┘  → verify → CC
   *         └ exact: (caption, bytes-hash) collapse → star edges (lossless)
   *
@@ -31,7 +31,7 @@ import graft.images.ImageCodec
   * Scale notes: `bytes` is projected out at the door and re-joined ONLY for
   * verified-candidate PSNR checks (column pruning keeps the 100 TB payload
   * out of every shuffle); exact dups collapse before any signature work;
-  * all bucket self-joins go through SkewSalting.
+  * the bucket self-join goes through SkewSalting.
   */
 object ImageDedupPipeline {
 
@@ -41,8 +41,42 @@ object ImageDedupPipeline {
   /** Checkpointed run (resumable): works with any [[StageStore]] — a
     * parquet-dir [[StageCheckpoint]] or a catalog/Iceberg-path
     * [[CatalogStageCheckpoint]]. */
-  def run(spark: SparkSession, input: DataFrame, checkpoint: StageStore): DataFrame =
-    runImpl(spark, input, checkpoint)
+  def run(spark: SparkSession, input: DataFrame, ckpt: StageStore): DataFrame = {
+    val s1Fresh = !ckpt.isDone("s1_annotated")
+    val annotated = ckpt.stage("s1_annotated")(annotate(input))
+    // A clustering run KNOWS which corpus its snapshots derive from —
+    // record the fingerprint IncrementalImageDedup enforces, so a later
+    // import reusing this store's s1/s2 snapshots runs verified (only
+    // when this run staged s1 itself, into a durable store)
+    if (s1Fresh && ckpt.isDone("s1_annotated") && !ckpt.isDone("inc_corpus_fprint"))
+      stageFingerprint(spark, ckpt, "inc_corpus_fprint", fingerprint(input))
+    val starEdges = ckpt.stage("s1_star_edges")(starEdgesOf(annotated))
+    val shingleTbl = ckpt.stage("s2_shingles")(shingleGramTable(capRepsOf(annotated)))
+    val (capPairs, samePairs) = candidates(annotated, ckpt)
+
+    // ---- stage: verify — caption criterion AND image criterion
+    val verified = ckpt.stage("s6_verified_edges") {
+      val members = membersOf(annotated)
+      verifyLadder(capPairs, shingleTbl, shingleTbl, members, members, samePairs,
+        repsOf(annotated),
+        input.select(col("image_id"), col("bytes")))
+    }
+
+    // ---- stage: connected components over verified ∪ exact-star edges;
+    // the job's store also takes CC's periodic reliable checkpoints, so an
+    // executor-loss restart resumes mid-iteration instead of re-running the
+    // whole O(log² n) loop (localCheckpoint alone is not fault-tolerant).
+    // The edges are canonical (distinct, a < b): verified pairs are
+    // (least, greatest) reps of two captions or self-join pairs of one,
+    // star edges are (rep = class min, member), and a member is no rep.
+    ckpt.stage("s7_clusters") {
+      val edges = verified.select("a", "b").unionByName(starEdges.select("a", "b"))
+      ConnectedComponents.run(spark, edges,
+        Some(annotated.select(col("image_id").as("id"))),
+        store = Some(ckpt), edgesCanonical = true)
+        .select(col("id").as("image_id"), col("cluster_id"))
+    }
+  }
 
   /** Bench/throughput run: no stage snapshots — multiply-consumed
     * intermediates are localCheckpoint'ed, everything else stays a lazy
@@ -51,8 +85,11 @@ object ImageDedupPipeline {
     * final stage: under AQE (on by default) the call itself runs every
     * shuffle map stage of its plan as a job on the spot. */
   def runDirect(spark: SparkSession, input: DataFrame): DataFrame = {
+    // s3_candidate_pairs is read twice (caption pairs, row pairs) yet stays
+    // a plan: a lazy checkpoint that two concurrent stages read is computed
+    // twice
     val reuse = Set("s1_annotated", "s2_shingles", "s6_verified_edges")
-    runImpl(spark, input, new StageStore {
+    run(spark, input, new StageStore {
       def stage(name: String)(compute: => DataFrame): DataFrame =
         // cc_edges_* periodic commits degrade to plain lineage truncation
         // here (a bench run has no durability requirement)
@@ -110,8 +147,7 @@ object ImageDedupPipeline {
         explode(sequence(lit(0L), lit(HammingChunks - 1L))).as("chunk_idx"))
       .withColumn("chunk_val",
         expr(s"shiftright(phash, cast(chunk_idx * $chunkBits AS int)) & CAST($mask AS bigint)"))
-      .withColumn("bucket", xxhash64(col("grp"), col("chunk_idx"), col("chunk_val")))
-      .select(col("id"), col("bucket"))
+      .select(col("id"), xxhash64(col("grp"), col("chunk_idx"), col("chunk_val")).as("bucket"))
   }
 
   /** Verify ladder (SURVEY §2 B9), the one both pipelines call: two rows
@@ -136,7 +172,7 @@ object ImageDedupPipeline {
     * @param shA       (id, shingles, grams) per caption id
     * @param membersA  (cid, image_id) exact-class reps per caption id
     * @param samePairs (a, b) distinct rep row pairs within caption groups
-    * @param reps      (image_id, caption, bytes_hash, phash) per rep
+    * @param reps      rep rows with (image_id, caption, bytes_hash, phash)
     * @param bytesTbl  (image_id, bytes) */
   private[pipeline] def verifyLadder(capPairs: DataFrame, shA: DataFrame, shB: DataFrame,
                                      membersA: DataFrame, membersB: DataFrame,
@@ -195,9 +231,12 @@ object ImageDedupPipeline {
   private[pipeline] def starEdgesOf(ann: DataFrame): DataFrame =
     ann.where(col("image_id") =!= col("rep")).select(col("rep").as("a"), col("image_id").as("b"))
 
-  /** MinHash-LSH band rows (id, band_idx, band_hash) per caption rep. */
-  private[pipeline] def bandsOf(capReps: DataFrame): DataFrame =
-    MinHashLsh.bands(MinHashLsh.signaturesFromText(capReps, "cid", "caption"))
+  /** Folded MinHash-LSH band rows (bucket, id) per caption rep. */
+  private[pipeline] def foldedBands(capReps: DataFrame): DataFrame =
+    MinHashLsh.fold(MinHashLsh.bands(MinHashLsh.signaturesFromText(capReps, "cid", "caption")))
+  /** L-gram hash rows (id, bucket = gram hash) per caption rep. */
+  private[pipeline] def gramsOf(capReps: DataFrame): DataFrame =
+    TextAnalysis.gramTable(capReps, "cid", "caption").withColumnRenamed("gram_hash", "bucket")
 
   /** Expand caption-level pairs (cid_a, cid_b) → (least, greatest) pairs
     * of their exact-class reps through each side's member map; member
@@ -222,74 +261,54 @@ object ImageDedupPipeline {
                                          fp: (Long, Long)): Unit =
     ckpt.stage(name)(spark.createDataFrame(Seq(fp)).toDF("cnt", "xh"))
 
-  /** Candidate stages s3–s5 over ONE annotated table → (caption-id pairs
-    * of s3 ∪ s4, rep row pairs of s5), the two candidate inputs of
-    * [[verifyLadder]]. The full run applies them to its whole input; an
-    * import applies them to its delta alone (the delta×delta leg, staged
-    * under the import's namespace), so both pipelines block with one
-    * definition.
+  /** Blocking schemes of [[candidates]], the `scheme` codes of stage
+    * `s3_candidate_pairs`. */
+  val LshScheme = 0
+  val LGramScheme = 1
+  val PhashScheme = 2
+
+  /** Candidate stage s3 over ONE annotated table → (caption-id pairs of the
+    * LSH and L-gram schemes, rep row pairs of the phash scheme), the two
+    * candidate inputs of [[verifyLadder]]. The full run applies it to its
+    * whole input; an import applies it to its delta alone (the
+    * delta×delta leg, staged under the import's namespace), so both
+    * pipelines block with one definition.
     *
-    * s3/s4 are caption-level (MinHash-LSH bands, shared L-token run); the
-    * ladder decides their caption criterion per caption pair and expands
-    * only the passing ones to rows.
+    * The three schemes are rows of ONE (scheme, bucket, id) table and one
+    * salted self-join over key (scheme, bucket), as the reference's
+    * Blocking job groups every configured scheme behind one shuffle: one
+    * skew probe and one pair join per run, and the schemes' upstream
+    * stages run concurrently in one query. The id is a (scheme, id)
+    * struct, so two schemes pairing the same ids stay two rows; within a
+    * scheme structs order and hash by id, so each scheme keeps its own
+    * buckets, its own salting and exactly the pairs it would yield alone.
     *
-    * s5: phash chunk buckets WITHIN caption groups (composite blocking
-    * key, cf. the reference's multi-scheme blocking). The dup semantics
-    * require caption-near AND image-near, and the binding caption
-    * constraint must drive candidate generation: a global phash join
-    * explodes whenever image space is less diverse than id space
-    * (measured: 20k procedural images → 452 phash values → 35M row pairs).
-    * Within-caption it covers exactly the class LSH/substring can't: equal
-    * captions too short to shingle + near-identical images (D3). Caption
-    * groups are keyed by cid, so the blocking key never shuffles the
-    * caption STRING. The standalone image-only operator remains
-    * SimHashNearDup. */
+    *  - LSH (MinHash bands) and L-gram (a shared L-token run) are
+    *    caption-level; the ladder decides their caption criterion per
+    *    caption pair and expands only the passing ones to rows.
+    *  - phash: chunk buckets WITHIN caption groups (composite blocking
+    *    key, cf. the reference's multi-scheme blocking). The dup semantics
+    *    require caption-near AND image-near, and the binding caption
+    *    constraint must drive candidate generation: a global phash join
+    *    explodes whenever image space is less diverse than id space
+    *    (measured: 20k procedural images → 452 phash values → 35M row
+    *    pairs). Within-caption it covers exactly the class LSH/L-gram
+    *    can't: equal captions too short to shingle + near-identical images
+    *    (D3). Caption groups are keyed by cid, so the blocking key never
+    *    shuffles the caption STRING. The standalone image-only operator
+    *    remains SimHashNearDup. */
   private[pipeline] def candidates(annotated: DataFrame, ckpt: StageStore): (DataFrame, DataFrame) = {
     val capReps = capRepsOf(annotated)
-    val lshPairs = ckpt.stage("s3_lsh_pairs")(MinHashLsh.candidatePairs(bandsOf(capReps)))
-    val substrPairs = ckpt.stage("s4_substr_pairs") {
-      TextAnalysis.substringPairs(capReps, "cid", "caption")
+    def scheme(code: Int, buckets: DataFrame) = buckets.select(lit(code).as("scheme"),
+      col("bucket"), struct(lit(code).as("scheme"), col("id")).as("sid"))
+    val pairs = ckpt.stage("s3_candidate_pairs") {
+      val buckets = scheme(LshScheme, foldedBands(capReps))
+        .unionByName(scheme(LGramScheme, gramsOf(capReps)))
+        .unionByName(scheme(PhashScheme, phashChunks(repsOf(annotated), col("cid"))))
+      SkewSalting.selfJoinPairs(buckets, Seq("scheme", "bucket"), "sid", SaltCap, SaltFanout)
+        .select(col("a.scheme").as("scheme"), col("a.id").as("a"), col("b.id").as("b"))
     }
-    val imgPairs = ckpt.stage("s5_img_pairs") {
-      SkewSalting.selfJoinPairs(phashChunks(repsOf(annotated), col("cid")),
-          Seq("bucket"), "id", SaltCap, SaltFanout)
-        .withColumn("src", lit("phash"))
-    }
-    (lshPairs.unionByName(substrPairs), imgPairs.select("a", "b"))
-  }
-
-  private def runImpl(spark: SparkSession, input: DataFrame, ckpt: StageStore): DataFrame = {
-
-    val s1Fresh = !ckpt.isDone("s1_annotated")
-    val annotated = ckpt.stage("s1_annotated")(annotate(input))
-    // A clustering run KNOWS which corpus its snapshots derive from —
-    // record the fingerprint IncrementalImageDedup enforces, so a later
-    // import reusing this store's s1/s2 snapshots runs verified (only
-    // when this run staged s1 itself, into a durable store)
-    if (s1Fresh && ckpt.isDone("s1_annotated") && !ckpt.isDone("inc_corpus_fprint"))
-      stageFingerprint(spark, ckpt, "inc_corpus_fprint", fingerprint(input))
-    val starEdges = ckpt.stage("s1_star_edges")(starEdgesOf(annotated))
-    val shingleTbl = ckpt.stage("s2_shingles")(shingleGramTable(capRepsOf(annotated)))
-    val (capPairs, samePairs) = candidates(annotated, ckpt)
-
-    // ---- stage: verify — caption criterion AND image criterion
-    val verified = ckpt.stage("s6_verified_edges") {
-      val members = membersOf(annotated)
-      verifyLadder(capPairs, shingleTbl, shingleTbl, members, members, samePairs,
-        repsOf(annotated).select(col("image_id"), col("caption"), col("bytes_hash"), col("phash")),
-        input.select(col("image_id"), col("bytes")))
-    }
-
-    // ---- stage: connected components over verified ∪ exact-star edges;
-    // the job's store also takes CC's periodic reliable checkpoints, so an
-    // executor-loss restart resumes mid-iteration instead of re-running the
-    // whole O(log² n) loop (localCheckpoint alone is not fault-tolerant)
-    ckpt.stage("s7_clusters") {
-      val edges = verified.select("a", "b").unionByName(starEdges.select("a", "b"))
-      ConnectedComponents.run(spark, edges,
-        Some(annotated.select(col("image_id").as("id"))),
-        store = Some(ckpt))
-        .select(col("id").as("image_id"), col("cluster_id"))
-    }
+    (pairs.where(col("scheme") =!= PhashScheme).select("a", "b"),
+      pairs.where(col("scheme") === PhashScheme).select("a", "b"))
   }
 }

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.config.GoldenConfig._
-import graft.operators.{MinHashLsh, SkewSalting, TextAnalysis, ConnectedComponents}
+import graft.operators.{SkewSalting, ConnectedComponents}
 import ImageDedupPipeline.{run => _, runDirect => _, _}
 
 /** Incremental (delta-vs-corpus) image dedup — the production shape of the
@@ -24,8 +24,8 @@ import ImageDedupPipeline.{run => _, runDirect => _, _}
   *    map-side (bloom over pairable keys), so the shuffle volume tracks the
   *    DELTA's bucket footprint, not the corpus's.
   *  - delta-internal duplicates are found by the full pipeline's own
-  *    candidate stages s3–s5 ([[ImageDedupPipeline.candidates]]), run on
-  *    the (small) delta only.
+  *    blocking stage s3 ([[ImageDedupPipeline.candidates]]), run on the
+  *    (small) delta only.
   *
   * Semantics: identical duplicate criterion as [[ImageDedupPipeline]] (one
   * shared verify ladder). Output clusters = connected components over
@@ -104,11 +104,6 @@ object IncrementalImageDedup {
     }
   }
 
-  // corpus-side signature tables, as run() and absorb() stage them: bands
-  // pre-folded to (bucket, id), L-gram hashes as (id, gram_hash)
-  private def foldedBands(capReps: DataFrame): DataFrame = MinHashLsh.fold(bandsOf(capReps))
-  private def gramsOf(capReps: DataFrame): DataFrame = TextAnalysis.gramTable(capReps, "cid", "caption")
-
   /** The current (latest-generation) folded corpus band snapshot —
     * what streaming ingest joins
     * ([[graft.streaming.StreamingDedup.nearDupAgainstCorpusSnapshot]]) and
@@ -143,21 +138,17 @@ object IncrementalImageDedup {
 
   /** Bucket spec for [[CatalogStageCheckpoint]] wiring the incremental
     * corpus SIGNATURE tables (every generation variant: base, `_g<N>`
-    * compactions, `_d<N>` absorb deltas) to hash-bucketed staging on their
-    * candidate-join key. A warm import against such a store reads the
-    * corpus side of each cross join pre-partitioned — zero corpus-side
-    * Exchange (plan-pinned in IncrementalBucketingSpec), which at 10^12
-    * rows removes the shuffle of the delta-footprint + bloom-FP corpus
-    * slice every single day. `buckets` should be sized so one bucket of
+    * compactions, `_d<N>` absorb deltas) to hash-bucketed staging on
+    * `bucket`, the candidate-join key all of them share. A warm import
+    * against such a store reads the corpus side of each cross join
+    * pre-partitioned — zero corpus-side Exchange (plan-pinned in
+    * IncrementalBucketingSpec), which at 10^12 rows removes the shuffle of
+    * the delta-footprint + bloom-FP corpus slice every single day. `buckets` should be sized so one bucket of
     * the BAND table fits an executor core's working set (rows ≈ 32·corpus
     * / buckets). */
-  def bucketSpec(buckets: Int): String => Option[(String, Int)] = name => {
-    name.replaceAll("_[gd]\\d+$", "") match {
-      case "inc_corpus_bands" | "inc_corpus_phchunks" => Some(("bucket", buckets))
-      case "inc_corpus_grams"                         => Some(("gram_hash", buckets))
-      case _                                          => None
-    }
-  }
+  def bucketSpec(buckets: Int): String => Option[(String, Int)] = name =>
+    Option.when(signatureBases(name.replaceAll("_[gd]\\d+$", "")))(("bucket", buckets))
+  private val signatureBases = Set("inc_corpus_bands", "inc_corpus_grams", "inc_corpus_phchunks")
 
   /** The initial full-pipeline snapshot that can stand in for a gen-0
     * corpus artifact (see run(): a store populated by ImageDedupPipeline
@@ -347,12 +338,12 @@ object IncrementalImageDedup {
       SkewSalting.crossJoinPairs(bandC, foldedBands(capRepsD),
           Seq("bucket"), "id", SaltCap, SaltFanout, leftBucketed = bandsBk)
         .unionByName(SkewSalting.crossJoinPairs(gramC, gramsOf(capRepsD),
-          Seq("gram_hash"), "id", SaltCap, SaltFanout, leftBucketed = gramsBk))
+          Seq("bucket"), "id", SaltCap, SaltFanout, leftBucketed = gramsBk))
     }
     val phCross = SkewSalting.crossJoinPairs(chunkC, phashChunks(repsD, col("caption")),
         Seq("bucket"), "id", SaltCap, SaltFanout, leftBucketed = chunksBk)
       .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-    // ---- delta×delta candidates: the full run's stages s3–s5, on the delta
+    // ---- delta×delta candidates: the full run's stage s3, on the delta
     val (capSelfD, sameSelfD) = candidates(annD, imp)
 
     // ---- the full run's verify ladder over both legs: every caption pair
@@ -362,8 +353,7 @@ object IncrementalImageDedup {
       verifyLadder(capCross.unionByName(capSelfD),
         shC.unionByName(shD), shD, memberC.unionByName(memberD), memberD,
         phCross.unionByName(sameSelfD),
-        repsC.unionByName(repsD)
-          .select(col("image_id"), col("caption"), col("bytes_hash"), col("phash")),
+        repsC.unionByName(repsD),
         corpus.select(col("image_id"), col("bytes"))
           .unionByName(delta.select(col("image_id"), col("bytes"))))
     }

@@ -58,6 +58,11 @@ class VerifyLadderSpec extends AnyFlatSpec with Matchers with SparkTestBase {
   private def served(store: StageStore, name: String): DataFrame =
     store.stage(name)(sys.error(s"stage '$name' was not committed"))
 
+  /** (caption-id pairs, rep row pairs) of a staged candidate table. */
+  private def schemePairs(pairs: DataFrame): (DataFrame, DataFrame) =
+    (pairs.where(col("scheme") =!= PhashScheme).select("a", "b"),
+      pairs.where(col("scheme") === PhashScheme).select("a", "b"))
+
   "the verify ladder" should "verify the per-row-pair ladder's edges in a full run" in {
     for (seed <- Seq(42L, 7L)) withClue(s"seed $seed: ") { releasing {
       val input = SyntheticImages.generate(spark, 2000L, seed).toDF().localCheckpoint()
@@ -66,9 +71,9 @@ class VerifyLadderSpec extends AnyFlatSpec with Matchers with SparkTestBase {
       def st(name: String) = served(store, name)
       val ann = st("s1_annotated")
       val members = membersOf(ann)
-      val cand = expand(st("s3_lsh_pairs"), members, members)
-        .unionByName(expand(st("s4_substr_pairs"), members, members))
-        .unionByName(st("s5_img_pairs").select("a", "b"))
+      val (capPairs, samePairs) = schemePairs(st("s3_candidate_pairs"))
+      val cand = expand(capPairs, members, members)
+        .unionByName(samePairs)
         .dropDuplicates("a", "b")
       val want = edges(referenceLadder(cand, capt(ann), byRow(members, st("s2_shingles")),
         input.select(col("image_id"), col("bytes"))))
@@ -90,14 +95,14 @@ class VerifyLadderSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     def st(name: String) = served(store, name)
     val (annC, annD) = (st("inc_corpus_annotated"), st("v1_inc_delta_annotated"))
     val (memberC, memberD) = (membersOf(annC), membersOf(annD))
+    val (capSelfD, sameSelfD) = schemePairs(st("v1_s3_candidate_pairs"))
     val phCross = SkewSalting.crossJoinPairs(st("inc_corpus_phchunks"),
         phashChunks(repsOf(annD), col("caption")), Seq("bucket"), "id", SaltCap, SaltFanout)
       .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
     val cand = expand(st("v1_inc_cap_cross_pairs"), memberC, memberD)
       .unionByName(phCross)
-      .unionByName(expand(st("v1_s3_lsh_pairs"), memberD, memberD))
-      .unionByName(expand(st("v1_s4_substr_pairs"), memberD, memberD))
-      .unionByName(st("v1_s5_img_pairs").select("a", "b"))
+      .unionByName(expand(capSelfD, memberD, memberD))
+      .unionByName(sameSelfD)
       .dropDuplicates("a", "b")
     val want = edges(referenceLadder(cand, capt(annC).unionByName(capt(annD)),
       byRow(memberC, st("inc_corpus_shingles")).unionByName(byRow(memberD, st("v1_inc_delta_shingles"))),
