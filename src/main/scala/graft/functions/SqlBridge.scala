@@ -11,12 +11,4 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object Bridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-
-  /** Register a function into a live session's registry (sessionState is
-    * `private[sql]`; same access-qualifier purpose as the converters). */
-  def registerFunction(spark: SparkSession,
-                       ident: org.apache.spark.sql.catalyst.FunctionIdentifier,
-                       info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
 }

@@ -193,26 +193,22 @@ object ImageDedupPipeline {
       .unionByName(samePairs.select(col("a"), col("b"), lit(true).as("same")))
     def meta(side: String) = reps.select(col("image_id").as(side), col("caption").as(s"cap_$side"),
       col("bytes_hash").as(s"bh_$side"), col("phash").as(s"ph_$side"))
-    // consumed twice (the surviving ids and the PSNR join); under AQE this
-    // checkpoint runs every shuffle map stage of its plan at once
     val imagePass = rows.join(meta("a"), "a").join(meta("b"), "b")
       .where(col("same") === (col("cap_a") === col("cap_b")))
       .withColumn("bytes_eq", col("bh_a") === col("bh_b"))
       .where(col("bytes_eq") || expr(s"bit_count(ph_a ^ ph_b) <= $HammingMax"))
-      .select(col("a"), col("b"), col("bytes_eq"))
-      .localCheckpoint(false)
 
-    // prune the heavy payload BEFORE it ever enters a shuffle: only rows
-    // that appear in a surviving candidate pair carry their bytes into the
-    // PSNR join (otherwise the full binary column is shuffled twice to
-    // serve a few thousand pairs — pure memory-bandwidth burn)
-    val candIds = imagePass.select(explode(array(col("a"), col("b"))).as("image_id")).distinct()
-    val neededBytes = bytesTbl.join(candIds, Seq("image_id"), "left_semi")
-      .localCheckpoint(false)
-
+    // the heavy payload joins ONCE, and only for the ids of surviving pairs:
+    // each pair explodes to its two (side, image_id) rows, takes its bytes
+    // and regroups, so the pair plan is read once and needs no checkpoint
+    // (a lazy checkpoint that two concurrent stages read is computed twice)
     imagePass
-      .join(neededBytes.select(col("image_id").as("a"), col("bytes").as("bytes_a")), "a")
-      .join(neededBytes.select(col("image_id").as("b"), col("bytes").as("bytes_b")), "b")
+      .select(col("a"), col("b"), col("bytes_eq"),
+        posexplode(array(col("a"), col("b"))).as(Seq("side", "image_id")))
+      .join(bytesTbl, "image_id")
+      .groupBy("a", "b", "bytes_eq")
+      .agg(max(when(col("side") === 0, col("bytes"))).as("bytes_a"),
+        max(when(col("side") === 1, col("bytes"))).as("bytes_b"))
       .where(col("bytes_eq") ||
         psnrUdf(col("bytes_a"), col("bytes_b")) >= PsnrMinDb)
       .select(col("a"), col("b"))

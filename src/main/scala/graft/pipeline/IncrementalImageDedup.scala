@@ -104,12 +104,9 @@ object IncrementalImageDedup {
     }
   }
 
-  /** The current (latest-generation) folded corpus band snapshot —
-    * what streaming ingest joins
-    * ([[graft.streaming.StreamingDedup.nearDupAgainstCorpusSnapshot]]) and
-    * [[absorb]] extends; resolving through here keeps stream and batch on
-    * one corpus view across absorb generations. Fails loudly if no import
-    * has staged corpus bands in this store yet. */
+  /** The current (latest-generation) folded corpus band snapshot — what
+    * [[absorb]] extends, resolved across absorb generations. Fails loudly
+    * if no import has staged corpus bands in this store yet. */
   def corpusBands(ckpt: StageStore): DataFrame =
     corpusArtifactAt(ckpt, "inc_corpus_bands", latestGen(ckpt))
 

@@ -88,6 +88,19 @@ class HashParitySpec extends AnyFlatSpec with Matchers with SparkTestBase {
     }
   }
 
+  "dotF kernel" should "left-fold the dot product of two float arrays" in {
+    spark.range(1).select(
+      GraftExpressions.dotF(array(lit(1.0f), lit(2.0f)), array(lit(3.0f), lit(4.0f))))
+      .head().getDouble(0) shouldBe 11.0
+  }
+
+  "hyperplane-bucket kernel" should "stay in [0, 2^planes)" in {
+    val b = spark.range(1).select(
+      GraftExpressions.hyperplaneBucket(array(lit(0.5f), lit(-0.25f)), AnnHyperplanes))
+      .head().getLong(0)
+    b should (be >= 0L and be < (1L << AnnHyperplanes))
+  }
+
   "minhash signature" should "agree between builtin expressions and kernel on real docs" in {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val sh = docs.select(col("doc_id"),

@@ -225,4 +225,13 @@ class SamplingSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     noException should be thrownBy
       Sampling.bernoulli(big, "id", rateMillis = 500).collect()
   }
+
+  "BoundedTopKAgg.boundedTopK" should "aggregate the k smallest (key, id) pairs per group" in {
+    val rows = Seq((1L, 30L, 300L), (1L, 10L, 100L), (1L, 20L, 200L), (2L, 5L, 50L))
+      .toDF("g", "key", "id")
+      .groupBy("g").agg(graft.functions.BoundedTopKAgg.boundedTopK(col("key"), col("id"), 2))
+      .orderBy("g").collect()
+    rows.map(_.getSeq[org.apache.spark.sql.Row](1).map(r => (r.getLong(0), r.getLong(1)))) shouldBe
+      Array(Seq((10L, 100L), (20L, 200L)), Seq((5L, 50L)))
+  }
 }

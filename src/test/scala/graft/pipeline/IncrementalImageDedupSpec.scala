@@ -109,7 +109,7 @@ class IncrementalImageDedupSpec extends AnyFlatSpec with Matchers with SparkTest
     IncrementalImageDedup.absorb(spark, s1, "d1") shouldBe 1
     val s2 = new StageCheckpoint(spark, dir)
     IncrementalImageDedup.latestGen(s2) shouldBe 1
-    // the corpus-band view streaming/batch share now resolves generation 1
+    // the corpus-band view now resolves generation 1
     // and includes the absorbed delta's bands
     IncrementalImageDedup.corpusBands(s2).count() should be > bandsGen0
 
