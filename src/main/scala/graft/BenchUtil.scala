@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** What the non-frozen mains share: their one session factory, the query
-  * name check and filesystem/catalog hygiene. */
+  * name check and filesystem hygiene. */
 object BenchUtil {
 
   /** Local cores of a main's session: `SPARK_GRAFT_CPUS`, else every core
@@ -41,15 +41,4 @@ object BenchUtil {
     f.delete(); ()
   }
 
-  /** Drop a session-catalog namespace AND its physical warehouse
-    * directory. `DROP NAMESPACE` alone is not enough across JVMs: the
-    * in-memory catalog of a fresh session does not know the previous
-    * run's tables, yet their managed-table files survive under
-    * `spark-warehouse/<ns>.db/` and a later `create()`/`saveAsTable`
-    * refuses the non-empty location. */
-  def dropNamespacePhysical(spark: SparkSession, ns: String): Unit = {
-    spark.sql(s"DROP NAMESPACE IF EXISTS $ns CASCADE")
-    deleteRecursively(new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), s"$ns.db"))
-  }
 }

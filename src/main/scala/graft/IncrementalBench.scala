@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.images.SyntheticImages
-import graft.pipeline.{CatalogStageCheckpoint, ImageDedupPipeline, IncrementalImageDedup, StageCheckpoint}
+import graft.pipeline.{ImageDedupPipeline, IncrementalImageDedup, StageCheckpoint}
 
 /** Measures the incremental-import claim: assigning a small delta into an
   * already-clustered corpus must beat a full re-run over corpus ∪ delta —
@@ -161,36 +161,6 @@ object IncrementalBench {
       s""","absorb_loop":{"day1_sec":$day1Sec,"absorb_sec":$absorbSec,"day2_sec":$day2Sec,"recall_day2":$recall2$fixedJson}"""
     } else ""
 
-    // optional (GRAFT_BENCH_BUCKETED=1): warm import with the corpus
-    // signature tables staged BUCKETED on their join keys (catalog store +
-    // IncrementalImageDedup.bucketSpec) vs the same catalog store plain.
-    // Cold populate + warm measure share one session per variant (the
-    // in-memory session catalog does not outlive a session); both variants
-    // carry identical same-session cache pressure, so the warm-vs-warm
-    // delta isolates the bucketing effect.
-    val bucketedJson = if (sys.env.get("GRAFT_BENCH_BUCKETED").contains("1")) {
-      def catalogWarm(tag: String,
-                      spec: String => Option[(String, Int)]): Double =
-        phase(s"bk-$tag") { s =>
-          val ns = s"graft_bench_bk_${tag}_$n"
-          BenchUtil.dropNamespacePhysical(s, ns)
-          val (corpus, delta) = split(s.read.parquet(inputPath))
-          val prior = s.read.parquet(clustersPath)
-          IncrementalImageDedup.run(s, corpus, prior, delta,
-              new CatalogStageCheckpoint(s, ns, bucketSpec = spec), "w0")
-            .localCheckpoint().count()
-          val t0 = System.nanoTime()
-          IncrementalImageDedup.run(s, corpus, prior, delta,
-              new CatalogStageCheckpoint(s, ns, bucketSpec = spec), "w1")
-            .localCheckpoint().count()
-          (System.nanoTime() - t0) / 1e9
-        }
-      val plainWarm = catalogWarm("plain", _ => None)
-      // one bucket per shuffle partition (the session has one per core)
-      val bkWarm = catalogWarm("bucketed", IncrementalImageDedup.bucketSpec(cores))
-      s""","bucketed_warm":{"plain_sec":$plainWarm,"bucketed_sec":$bkWarm}"""
-    } else ""
-
-    println(s"""{"bench":"incremental","n":$n,"delta_pct":$deltaPct,"delta_rows":$deltaRows,"cores":$cores,"full_sec":$fullSec,"inc_cold_sec":$coldSec,"inc_warm_sec":$warmSec,"speedup_cold":${fullSec / coldSec},"speedup_warm":${fullSec / warmSec},"recall_cold":$recallCold,"recall_warm":$recallWarm$absorbJson$bucketedJson}""")
+    println(s"""{"bench":"incremental","n":$n,"delta_pct":$deltaPct,"delta_rows":$deltaRows,"cores":$cores,"full_sec":$fullSec,"inc_cold_sec":$coldSec,"inc_warm_sec":$warmSec,"speedup_cold":${fullSec / coldSec},"speedup_warm":${fullSec / warmSec},"recall_cold":$recallCold,"recall_warm":$recallWarm$absorbJson}""")
   }
 }

@@ -7,7 +7,7 @@ import graft.config.GoldenConfig.{P, LcgMul, LcgAddA}
 /** Audio modality plumbing (builder-prompt multimodal surface: "image/
   * audio/video as opaque binary columns with typed metadata ... STUB the
   * decode step behind a deterministic fake when the codec libs aren't in
-  * the container") — the audio sibling of [[graft.images.VideoFrames]].
+  * the container").
   *
   * REAL here: the schema contract (audio_id, bytes, duration_ms), the
   * hop-window sampler, the per-window feature table (energy / zero

@@ -50,10 +50,6 @@ object SyntheticImages {
     Array.fill(n)(words(r.nextInt(words.length)))
   }
 
-  /** Deterministic caption text for row id (public for caption-only
-    * benches that skip pixel generation). */
-  def genCaption(id: Long): String = baseCaption(GoldenConfig.Seed, id).mkString(" ")
-
   /** Pure row generator. */
   def genRow(seed: Long, id: Long): ImageRow = {
     val m = id % 20

@@ -544,11 +544,6 @@ object AnnSearch {
       struct(m.cast("long").as("m"),
         slice(code, m * PqSubLen + 1, lit(PqSubLen)).as("sub")))
 
-  /** (id, m, sub) rows of a code table. */
-  def pqSubvectors(codes: DataFrame): DataFrame =
-    codes.select(col("id"), explode(pqSubArr(col("code"))).as("e"))
-      .select(col("id"), col("e.m").as("m"), col("e.sub").as("sub"))
-
   /** Exact integer squared L2 between two equal-length code arrays. */
   private def l2i(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), _ + _)
@@ -556,7 +551,7 @@ object AnnSearch {
   /** The M·K-row codebook gathered into ONE broadcastable row — a flat
     * slot-indexed array (_cbs[m·K + k + 1] = cent(m,k)), so assignment can
     * run as a per-row fold over the K entries of a subspace instead of a
-    * broadcast join + groupBy(id, m) re-shuffle (guide §2.4). pqTrain
+    * broadcast join + groupBy(id, m) re-shuffle (guide §2.4). pqTrainRow
     * maintains every (m, k) entry (empty entries coalesce to their
     * previous centroid), so the slot index is always dense. */
   private def codebookRow(cents: DataFrame): DataFrame =
@@ -566,36 +561,12 @@ object AnnSearch {
           col("cent")))),
         e => e("cent")).as("_cbs"))
 
-  /** Per-row nearest codebook entry of subspace `m`: fold with
-    * least(struct(d2, k)) — identical ordering (min d2, ties to lowest k)
-    * to the previous min-struct aggregation. */
-  private def bestK(sub: Column, cbs: Column, m: Column): Column =
-    aggregate(sequence(lit(0L), lit(PqK - 1L)),
-      struct(lit(Long.MaxValue).as("d2"), lit(Long.MaxValue).as("k")),
-      (acc, k) => least(acc, struct(
-        l2i(sub, element_at(cbs, (m * PqK + k + 1L).cast("int"))).as("d2"),
-        k.as("k"))))
-
-  /** Nearest codebook entry per (id, m): min (d2, k) — ties to lowest k.
-    * Map-side fold over the broadcast slot-indexed codebook; no shuffle. */
-  def pqAssign(sv: DataFrame, cents: DataFrame): DataFrame =
-    sv.crossJoin(broadcast(codebookRow(cents)))
-      .where(size(col("_cbs")) > 0)
-      .select(col("id"), col("m"),
-        bestK(col("sub"), col("_cbs"), col("m"))("k").as("k"))
-
   /** Per-subspace Lloyd's over the code table: init = subvectors of the
     * first K ids, then `iters` rounds of assign + round-half-up integer
     * mean (an empty codebook entry keeps its previous centroid). All M
-    * subspaces train in the same jobs — m is just a grouping column. */
-  def pqTrain(codes: DataFrame, iters: Int = PqIters): DataFrame =
-    pqTrainRow(codes, iters)
-      .select(posexplode(col("_cbs")))
-      .select(call_function("div", col("pos").cast("long"), lit(PqK.toLong)).as("m"),
-        pmod(col("pos").cast("long"), lit(PqK.toLong)).as("k"),
-        col("col").as("cent"))
-
-  /** Gathered-form PQ trainer: the codebook lives as ONE slot-indexed row
+    * subspaces train in the same jobs — m is just a grouping column.
+    *
+    * Gathered form: the codebook lives as ONE slot-indexed row
     * (_cbs[m·K + k + 1] = cent(m,k)) ACROSS iterations. Per iteration:
     * assignment is a map-side fold over the broadcast codebook row, the
     * update ONE fixed-width (PqSubLen sums + count) groupBy(m, k) — an
@@ -653,9 +624,6 @@ object AnnSearch {
     * picks the nearest codebook entry straight from the SQ8 code column —
     * no explode, no shuffle (same (m, k) values in the same m order as the
     * previous groupBy-collect formulation). */
-  def pqEncode(codes: DataFrame, cents: DataFrame): DataFrame =
-    pqEncodeRow(codes, codebookRow(cents))
-
   private def pqEncodeRow(codes: DataFrame, cbs: DataFrame): DataFrame =
     codes.crossJoin(broadcast(cbs))
       .where(size(col("_cbs")) > 0)

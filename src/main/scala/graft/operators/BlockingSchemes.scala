@@ -30,10 +30,6 @@ object BlockingSchemes {
     * use with explode(). */
   def tokenKeys(c: Column): Column = split(lower(c), " ")
 
-  /** MapBlockingScheme: every value of a map attribute is a key — use with
-    * explode(). */
-  def mapValueKeys(c: Column): Column = map_values(c)
-
   /** GeoCoordsBlockingScheme analog: numeric grid cell — floor(value/cell)
     * as the key (the reference rounds lat/lon to a grid; any numeric
     * banding has the same shape). */

@@ -36,11 +36,9 @@ object SimHashNearDup {
 
   /** Per-item majority-vote fingerprint over hash rows: bit b of the
     * output is set iff the majority of the item's hashes have bit b set
-    * (ties → 0) — the Chromaprint-style clip/sequence signature shared by
-    * the audio path (window hashes, [[graft.audio.AudioOps.fingerprints]])
-    * and the video path (frame phashes,
-    * [[graft.images.VideoFrames.fingerprints]]). Output (id, simhash)
-    * feeds [[nearDupPairs]] unchanged. */
+    * (ties → 0) — the Chromaprint-style clip/sequence signature of the
+    * audio path (window hashes, [[graft.audio.AudioOps.fingerprints]]).
+    * Output (id, simhash) feeds [[nearDupPairs]] unchanged. */
   def majorityFingerprint(df: DataFrame, idCol: String, hashCol: String,
                           bits: Int = 64): DataFrame =
     // ONE fixed-width aggregate (bits signed sums, map-side combining)

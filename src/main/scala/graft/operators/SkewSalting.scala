@@ -199,31 +199,10 @@ object SkewSalting {
     */
   /** @param maxBloomKeys overrides [[BloomMaxKeys]] — exposed so the
     *                      shuffle semi-join fallback is testable at small
-    *                      scale; production callers keep the default.
-    * @param leftBucketed  the left (corpus) side is served from a table
-    *                      hash-bucketed on `keyCols` (see
-    *                      [[graft.pipeline.StageStore.isBucketed]]): its
-    *                      scan already exposes the join's required
-    *                      partitioning, so the filtered corpus is cached
-    *                      partitioning-PRESERVINGLY (persist, not
-    *                      localCheckpoint — a checkpoint erases
-    *                      outputPartitioning) and the cold pair join plus
-    *                      the bucket-count aggregation run with ZERO
-    *                      corpus-side Exchange. Even the bloom's false
-    *                      positives (~[[BloomFppCross]] of the CORPUS — a
-    *                      corpus-scaled term the map-side filter cannot
-    *                      remove) then die locally in the join instead of
-    *                      riding the shuffle. The hot path explicitly
-    *                      BREAKS the inherited partitioning first: salting
-    *                      exists to spread one viral bucket over `fanout`
-    *                      tasks, and a plan that keeps the bucket
-    *                      co-located would satisfy the salted join's
-    *                      distribution requirement without an exchange —
-    *                      reintroducing the straggler. */
+    *                      scale; production callers keep the default. */
   def crossJoinPairs(left: DataFrame, right: DataFrame, keyCols: Seq[String],
                      idCol: String, cap: Int, fanout: Int,
-                     maxBloomKeys: Long = BloomMaxKeys,
-                     leftBucketed: Boolean = false): DataFrame = {
+                     maxBloomKeys: Long = BloomMaxKeys): DataFrame = {
     val keys = keyCols.map(col)
     val l = left.select(keys :+ col(idCol).as("id"): _*)
     val r = right.select(keys :+ col(idCol).as("id"): _*).localCheckpoint(false)
@@ -237,8 +216,7 @@ object SkewSalting {
     val keyHash = xxhash64(keys: _*)
     val filteredL = if (rBuckets <= BroadcastKeysMax)
       // explicit broadcast: a BroadcastHashJoin LeftSemi streams the
-      // corpus side partitioning-preservingly (the leftBucketed contract
-      // keeps holding) and needs no separate driver action
+      // corpus side and needs no separate driver action
       l.join(broadcast(rKeys), keyCols, "left_semi")
     else if (rBuckets <= maxBloomKeys) {
       val bloom = rKeys.stat.bloomFilter(keyHash, rBuckets, BloomFppCross)
@@ -246,12 +224,7 @@ object SkewSalting {
       val mightContain = udf((h: Long) => bc.value.mightContain(h))
       l.where(mightContain(keyHash))
     } else l.join(rKeys, keyCols, "left_semi")
-    val keptL =
-      if (leftBucketed) {
-        val p = filteredL.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        bucketedSlices.add(p)
-        p
-      } else filteredL.localCheckpoint(false)
+    val keptL = filteredL.localCheckpoint(false)
 
     // both counts are delta-scaled now; pairable = both sides present
     val lc = keptL.groupBy(keys: _*).agg(count(lit(1)).as("lcount"))
@@ -273,13 +246,8 @@ object SkewSalting {
     val coldR = cold(keptR)
     val coldPairs = crossPairJoin(coldL, coldR, keyCols)
 
-    // hot path: per-bucket choice of which side salts vs replicates. The
-    // localCheckpoint under leftBucketed deliberately erases the inherited
-    // bucket partitioning (hot rows are the delta-footprint ∩ hot-key
-    // subset — tiny) so the salted join MUST redistribute on (key, salt)
-    // — see the leftBucketed param doc.
-    val hotL0 = keptL.join(broadcast(hot), keyCols, "inner")
-    val hotL = if (leftBucketed) hotL0.localCheckpoint(false) else hotL0
+    // hot path: per-bucket choice of which side salts vs replicates
+    val hotL = keptL.join(broadcast(hot), keyCols, "inner")
     val hotR = keptR.join(broadcast(hot), keyCols, "inner")
     def salted(side: DataFrame, saltsWhenBigger: Boolean): DataFrame = {
       val bigger = if (saltsWhenBigger) col("left_bigger") else !col("left_bigger")
@@ -293,24 +261,6 @@ object SkewSalting {
       keyCols :+ "salt")
 
     coldPairs.unionByName(hotPairs).dropDuplicates("a", "b")
-  }
-
-  /** Corpus slices cached partitioning-preservingly by leftBucketed
-    * [[crossJoinPairs]] calls. Persisted handles outlive the call by
-    * design (the pair plan is lazy), so a long-lived session must release
-    * them once the plan is drained — previously they accumulated one
-    * corpus-scaled cache entry per import until LRU eviction (round-5
-    * ADVICE low). */
-  private val bucketedSlices =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Unpersist every corpus slice cached by leftBucketed
-    * [[crossJoinPairs]] calls so far. Call AFTER the pair plans have been
-    * drained (e.g. after an import's verified-edges stage commits);
-    * non-blocking. */
-  def releaseBucketedSlices(): Unit = {
-    var df = bucketedSlices.poll()
-    while (df != null) { df.unpersist(false); df = bucketedSlices.poll() }
   }
 
   private def crossPairJoin(l: DataFrame, r: DataFrame,

@@ -10,10 +10,9 @@ trait StageStore {
   /** Whether `stage(name)` would serve a completed snapshot without forcing
     * its compute. Default false — ephemeral stores recompute always. */
   def isDone(name: String): Boolean = false
-  /** Whether the committed stage is persisted hash-bucketed on its join
-    * key, i.e. `stage(name)` serves a scan whose outputPartitioning lets
-    * key-joins/aggs skip their Exchange. Default false — only bucket-aware
-    * catalog stores ever answer true. */
+  /** Always false: no store of this program buckets a stage. Kept only
+    * because the benchmark harness's metering store (perfbench
+    * `StoreMeter`) overrides it. */
   def isBucketed(name: String): Boolean = false
   /** Delete a committed stage's snapshot (storage hygiene — e.g. pruning
     * superseded corpus generations). Durable stores implement it; the
@@ -44,20 +43,9 @@ trait StageStore {
   * metrics land in `<stage>__metrics` tables; the run manifest is itself a
   * catalog table (`_manifest`), appended once per completed stage.
   */
-/** @param bucketSpec stage name → (bucket key column, bucket count) for
-  *   stages that should persist hash-bucketed (e.g. the incremental corpus
-  *   signature tables — [[graft.pipeline.IncrementalImageDedup.bucketSpec]]).
-  *   Bucketed stages go through [[Bucketing.writeBucketed]] (the V1
-  *   `bucketBy(...).sortBy(...)` writer, the session catalog's bucket
-  *   metadata path); an Iceberg deployment
-  *   expresses the same layout as `partitionedBy(bucket(n, col))` on the
-  *   writeTo path. Reads of a bucketed stage expose
-  *   HashPartitioning(key, n), so downstream key-joins/aggs skip their
-  *   corpus-side Exchange ([[StageStore.isBucketed]]). */
 class CatalogStageCheckpoint(spark: SparkSession, namespace: String,
                              format: String = "parquet",
-                             location: Option[String] = None,
-                             bucketSpec: String => Option[(String, Int)] = _ => None)
+                             location: Option[String] = None)
     extends StageStore {
 
   private val loc = location.map(l => s" LOCATION '$l'").getOrElse("")
@@ -67,15 +55,6 @@ class CatalogStageCheckpoint(spark: SparkSession, namespace: String,
   private val manifestTbl = tbl("_manifest")
 
   override def isDone(name: String): Boolean = spark.catalog.tableExists(tbl(name))
-
-  // If a stage landed through a store WITHOUT the spec (plain table) and
-  // is later probed through one WITH it, this over-reports — harmless:
-  // leftBucketed consumers only lose the exchange-elision (EnsureRequirements
-  // re-inserts any exchange the actual scan partitioning doesn't satisfy);
-  // results are unaffected. Single-writer stores keep one spec per
-  // namespace, so the situation is a migration corner, not a steady state.
-  override def isBucketed(name: String): Boolean =
-    bucketSpec(name).isDefined && isDone(name)
 
   /** Drops the stage table and its metrics table; the manifest keeps the
     * historical commit row (isDone turns false with the table gone, so a
@@ -100,11 +79,7 @@ class CatalogStageCheckpoint(spark: SparkSession, namespace: String,
       out
     } else {
       val t0 = System.nanoTime()
-      bucketSpec(name) match {
-        case Some((key, n)) => Bucketing.writeBucketed(compute, tbl(name), key, n, format)
-        case None =>
-          compute.writeTo(tbl(name)).using(format).create()
-      }
+      compute.writeTo(tbl(name)).using(format).create()
       val out = spark.table(tbl(name))
       writeMetricsIfMissing(name, out)
       val rows = out.count()

@@ -84,19 +84,20 @@ object ImageDedupPipeline {
     * table, not a generator). `localCheckpoint(false)` defers only the
     * final stage: under AQE (on by default) the call itself runs every
     * shuffle map stage of its plan as a job on the spot. */
-  def runDirect(spark: SparkSession, input: DataFrame): DataFrame = {
-    // s3_candidate_pairs is read twice (caption pairs, row pairs) yet stays
-    // a plan: a lazy checkpoint that two concurrent stages read is computed
-    // twice
-    val reuse = Set("s1_annotated", "s2_shingles", "s6_verified_edges")
-    run(spark, input, new StageStore {
-      def stage(name: String)(compute: => DataFrame): DataFrame =
-        // cc_edges_* periodic commits degrade to plain lineage truncation
-        // here (a bench run has no durability requirement)
-        if (reuse(name) || name.startsWith("cc_edges_"))
-          compute.localCheckpoint(false)
-        else compute
-    })
+  def runDirect(spark: SparkSession, input: DataFrame): DataFrame =
+    run(spark, input, directStore(Set("s1_annotated", "s2_shingles", "s6_verified_edges")))
+
+  /** The store of both pipelines' direct runs: the `reuse` stages are
+    * localCheckpoint'ed, every other stage stays a plan. A stage that `run`
+    * reads more than once belongs in `reuse`, except s3_candidate_pairs:
+    * the verify ladder reads it twice (caption pairs, row pairs) in two
+    * concurrent stages, which compute a lazy checkpoint twice. CC's
+    * periodic `cc_edges_*` commits degrade to plain lineage truncation (a
+    * direct run has no durability requirement). */
+  private[pipeline] def directStore(reuse: Set[String]): StageStore = new StageStore {
+    def stage(name: String)(compute: => DataFrame): DataFrame =
+      if (reuse(name) || name.contains("cc_edges_")) compute.localCheckpoint(false)
+      else compute
   }
 
   /** ONE windowed annotation pass over the scan — the exact-dup

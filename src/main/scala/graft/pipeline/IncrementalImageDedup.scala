@@ -133,20 +133,6 @@ object IncrementalImageDedup {
     latest
   }
 
-  /** Bucket spec for [[CatalogStageCheckpoint]] wiring the incremental
-    * corpus SIGNATURE tables (every generation variant: base, `_g<N>`
-    * compactions, `_d<N>` absorb deltas) to hash-bucketed staging on
-    * `bucket`, the candidate-join key all of them share. A warm import
-    * against such a store reads the corpus side of each cross join
-    * pre-partitioned — zero corpus-side Exchange (plan-pinned in
-    * IncrementalBucketingSpec), which at 10^12 rows removes the shuffle of
-    * the delta-footprint + bloom-FP corpus slice every single day. `buckets` should be sized so one bucket of
-    * the BAND table fits an executor core's working set (rows ≈ 32·corpus
-    * / buckets). */
-  def bucketSpec(buckets: Int): String => Option[(String, Int)] = name =>
-    Option.when(signatureBases(name.replaceAll("_[gd]\\d+$", "")))(("bucket", buckets))
-  private val signatureBases = Set("inc_corpus_bands", "inc_corpus_grams", "inc_corpus_phchunks")
-
   /** The initial full-pipeline snapshot that can stand in for a gen-0
     * corpus artifact (see run(): a store populated by ImageDedupPipeline
     * serves its s1/s2 snapshots instead of duplicating them). */
@@ -195,15 +181,15 @@ object IncrementalImageDedup {
 
   private val DefaultImportId = "i0"
 
-  /** Bench/test run without durable snapshots: every stage but the final
-    * `inc_clusters` is localCheckpoint'ed; the result stays a plan, so no
-    * block of it outlives the call. */
+  /** Bench/test run without durable snapshots, under the full run's
+    * policy ([[ImageDedupPipeline.directStore]]): only the annotated tables
+    * and the delta shingles, which `run` reads more than once, are
+    * localCheckpoint'ed; the result stays a plan, so no block of it
+    * outlives the call. */
   def runDirect(spark: SparkSession, corpus: DataFrame, corpusClusters: DataFrame,
                 delta: DataFrame): DataFrame =
-    run(spark, corpus, corpusClusters, delta, new StageStore {
-      def stage(name: String)(compute: => DataFrame): DataFrame =
-        if (name == s"${DefaultImportId}_inc_clusters") compute else compute.localCheckpoint(false)
-    })
+    run(spark, corpus, corpusClusters, delta, directStore(Set("inc_corpus_annotated",
+      s"${DefaultImportId}_inc_delta_annotated", s"${DefaultImportId}_inc_delta_shingles")))
 
   /** @param corpus         full prior table (input_hint schema)
     * @param corpusClusters (image_id, cluster_id) from the prior run
@@ -302,21 +288,9 @@ object IncrementalImageDedup {
     // row instead of three; this snapshot is the largest thing a warm
     // import reads (32 band rows per caption), so a third off its width is
     // a third off the import's dominant scan. ----
-    // Signature tables additionally report whether they were served from a
-    // SINGLE bucketed staging (store bucket spec + no delta generations
-    // stacked above the base — a union erases scan partitioning), which
-    // lets the candidate cross joins run with zero corpus-side Exchange
-    // (SkewSalting.crossJoinPairs leftBucketed). After absorbs stack delta
-    // stages, compactGenerations() restores the single-staging fast path.
-    def signatureArtifact(base: String)(compute: => DataFrame): (DataFrame, Boolean) =
-      if (gen == 0) (ckpt.stage(base)(compute), ckpt.isBucketed(base))
-      else (corpusArtifactAt(ckpt, base, gen, None),
-        fullBaseGen(ckpt, base, gen, None).contains(gen) &&
-          ckpt.isBucketed(corpusName(base, gen)))
-    val (bandC, bandsBk) = signatureArtifact("inc_corpus_bands")(foldedBands(capRepsC))
-    val (gramC, gramsBk) = signatureArtifact("inc_corpus_grams")(gramsOf(capRepsC))
-    val (chunkC, chunksBk) = signatureArtifact("inc_corpus_phchunks")(
-      phashChunks(repsC, col("caption")))
+    val bandC = corpusArtifact("inc_corpus_bands", None)(foldedBands(capRepsC))
+    val gramC = corpusArtifact("inc_corpus_grams", None)(gramsOf(capRepsC))
+    val chunkC = corpusArtifact("inc_corpus_phchunks", None)(phashChunks(repsC, col("caption")))
 
     // Record the fingerprint ONLY when this very run staged every corpus
     // artifact (freshCorpusStaging — implies generation 0) into a durable
@@ -333,12 +307,12 @@ object IncrementalImageDedup {
     // (per-side cids are not comparable) and so pairs one caption's rows.
     val capCross = imp.stage("inc_cap_cross_pairs") {
       SkewSalting.crossJoinPairs(bandC, foldedBands(capRepsD),
-          Seq("bucket"), "id", SaltCap, SaltFanout, leftBucketed = bandsBk)
+          Seq("bucket"), "id", SaltCap, SaltFanout)
         .unionByName(SkewSalting.crossJoinPairs(gramC, gramsOf(capRepsD),
-          Seq("bucket"), "id", SaltCap, SaltFanout, leftBucketed = gramsBk))
+          Seq("bucket"), "id", SaltCap, SaltFanout))
     }
     val phCross = SkewSalting.crossJoinPairs(chunkC, phashChunks(repsD, col("caption")),
-        Seq("bucket"), "id", SaltCap, SaltFanout, leftBucketed = chunksBk)
+        Seq("bucket"), "id", SaltCap, SaltFanout)
       .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
     // ---- delta×delta candidates: the full run's stage s3, on the delta
     val (capSelfD, sameSelfD) = candidates(annD, imp)
@@ -354,10 +328,6 @@ object IncrementalImageDedup {
         corpus.select(col("image_id"), col("bytes"))
           .unionByName(delta.select(col("image_id"), col("bytes"))))
     }
-    // the verified-edges stage commit drained every candidate pair plan —
-    // release the corpus slices the leftBucketed cross joins cached
-    // (round-5 ADVICE: they otherwise accumulate one per import)
-    SkewSalting.releaseBucketedSlices()
 
     // (no separate exact-cross join: a cross-side exact dup shares caption
     // AND phash, so it is always a phash-chunk cross candidate within its

@@ -113,4 +113,35 @@ class CatalogStageCheckpointSpec extends AnyFlatSpec with Matchers with SparkTes
       resumed.count() shouldBe 300L
     } finally spark.sql(s"DROP NAMESPACE IF EXISTS $ns CASCADE")
   }
+
+  it should "stay correct through an import's absorb → union-serving → compaction (full lifecycle)" in {
+    val (ns, loc) = freshNs("life")
+    try {
+      def store() = new CatalogStageCheckpoint(spark, ns, location = Some(loc))
+      val all = graft.images.SyntheticImages.generate(spark, 800L).toDF().localCheckpoint()
+      val idNum = expr("cast(substring(image_id, 5) as bigint)")
+      val corpus = all.where(idNum % 20 < 18).localCheckpoint()
+      val d1 = all.where(idNum % 20 === 18).localCheckpoint()
+      val d2 = all.where(idNum % 20 === 19).localCheckpoint()
+      val c0 = ImageDedupPipeline.runDirect(spark, corpus).localCheckpoint()
+
+      val st = store()
+      val out1 = IncrementalImageDedup.run(spark, corpus, c0, d1, st, "L1").localCheckpoint()
+      out1.count()
+      IncrementalImageDedup.absorb(spark, st, "L1") shouldBe 1
+      // generation 1 serves the corpus artifacts as a base+delta union
+      val corpus2 = corpus.unionByName(d1).localCheckpoint()
+      val out2 = IncrementalImageDedup.run(spark, corpus2, out1, d2, store(), "L2")
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      val full = ImageDedupPipeline.runDirect(spark, corpus2.unionByName(d2))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      out2 shouldBe full
+      // compaction writes the generation-1 full artifacts
+      IncrementalImageDedup.compactGenerations(store()) shouldBe 1
+      // a re-import against the compacted store still matches
+      val out2b = IncrementalImageDedup.run(spark, corpus2, out1, d2, store(), "L3")
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      out2b shouldBe full
+    } finally spark.sql(s"DROP NAMESPACE IF EXISTS $ns CASCADE")
+  }
 }
