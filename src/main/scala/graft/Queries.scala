@@ -101,9 +101,9 @@ object Queries {
     * id > their rep, so every component's min id IS its min rep id —
     * members can inherit their rep's cluster through one join instead of
     * dragging |corpus| star edges through every CC iteration. Identical
-    * (id, cluster_id) output to CC over dedupEdges ∪ stars (the previous
-    * shape); at 10^12 rows this also shrinks the iterated edge set by the
-    * duplication factor. */
+    * (id, cluster_id) output to CC over every row's verified edges ∪ the
+    * star edges (the previous shape); at 10^12 rows this also shrinks the
+    * iterated edge set by the duplication factor. */
   private def docClusters(s: SparkSession, d: DataFrame): DataFrame = {
     val (reps, star) = MinHashLsh.exactCollapse(d, "doc_id", "text")
     val sh = MinHashLsh.shingleTable(reps, "id", "text").localCheckpoint(false)
@@ -498,21 +498,22 @@ object Queries {
 
   /** Incremental clustering end-to-end: master clusters ∪ cross edges ∪
     * staging structure → connected components over all rows — the q41
-    * candidate path composed through [[MinHashLsh.dedupEdgesAgainst]] and
-    * CC, i.e. what an import's cluster assignment is made of. Edges are
-    * rep-level (exact classes collapse first); the oracle derives the same
-    * components from all-pairs SQL, and identical components ⇒ identical
-    * min-id labels ⇒ hash match. */
+    * candidate path ([[MinHashLsh.candidatePairsAgainst]]) with the master's
+    * own pairs and the exact cross edges, through CC, i.e. what an import's
+    * cluster assignment is made of. Edges are rep-level (exact classes
+    * collapse first); the oracle derives the same components from
+    * all-pairs SQL, and identical components ⇒ identical min-id labels ⇒
+    * hash match. */
   def crossDedupClusters(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     val master = d.where(col("doc_id") % 4 =!= 0)
     val staging = d.where(col("doc_id") % 4 === 0)
     // Rep-level CC (see docClusters): exactCollapse and the shingle tables
-    // are computed ONCE per split (dedupEdges + dedupEdgesAgainst each
-    // re-derived the master collapse before), and the star edges of both
-    // splits stay out of the iterated edge set — members inherit their
-    // rep's cluster by one join. Identical components ⇒ identical min-id
-    // labels (every rep is its text group's min id).
+    // are computed ONCE per split (a master pass and a cross pass built
+    // apart would each re-derive the master collapse), and the star edges
+    // of both splits stay out of the iterated edge set — members inherit
+    // their rep's cluster by one join. Identical components ⇒ identical
+    // min-id labels (every rep is its text group's min id).
     val (repsM, starM) = MinHashLsh.exactCollapse(master, "doc_id", "text")
     val (repsS, starS) = MinHashLsh.exactCollapse(staging, "doc_id", "text")
     val exactCross = repsM.withColumnRenamed("id", "a")

@@ -126,35 +126,6 @@ object MinHashLsh {
     SkewSalting.crossJoinPairs(fold(bandMaster), fold(bandStaging),
       Seq("bucket"), "id", saltCap, saltFanout)
 
-  /** Incremental dedup: edges connecting STAGING rows into MASTER clusters
-    * (master is assumed already deduped/clustered — its internal structure
-    * is not re-derived). Returns
-    *  - verified near-dup cross edges (a = master rep, b = staging rep),
-    *  - exact-text cross edges (same shape; identical text short-circuits
-    *    the signature path), and
-    *  - staging-internal star edges (a = staging rep, b = staging member),
-    * so connected components over (existing master clusters ∪ these edges)
-    * assigns every staging row. Staging-internal NEAR-dups that match no
-    * master row intentionally stay separate clusters here — run
-    * [[dedupEdges]] over staging alone and union if within-delta near-dup
-    * clustering is also wanted. */
-  def dedupEdgesAgainst(master: DataFrame, staging: DataFrame,
-                        idCol: String, textCol: String): DataFrame = {
-    val (repsM, _) = exactCollapse(master, idCol, textCol)
-    val (repsS, starS) = exactCollapse(staging, idCol, textCol)
-    val exactCross = repsM.withColumnRenamed("id", "a")
-      .join(repsS.withColumnRenamed("id", "b"), "text")
-      .select(col("a"), col("b"))
-    val sh = shingleTable(repsM, "id", "text")
-      .unionByName(shingleTable(repsS, "id", "text")).localCheckpoint(false)
-    val cand = candidatePairsAgainst(
-      bands(signaturesFromText(repsM, "id", "text")),
-      bands(signaturesFromText(repsS, "id", "text")))
-    verifyPairs(cand, sh).select(col("a"), col("b"))
-      .unionByName(exactCross).unionByName(starS)
-      .dropDuplicates("a", "b")
-  }
-
   /** Exact-duplicate star edges + representative table.
     * @return (reps: (id, text) one per distinct text with id = min member,
     *          starEdges: (a=rep, b=member) for non-representative members) */
@@ -166,15 +137,5 @@ object MinHashLsh {
       .where(col("id") =!= col("rep"))
       .select(col("rep").as("a"), col("id").as("b"))
     (reps, star)
-  }
-
-  /** Full caption path: (id, text) → near-dup candidate edges among
-    * representatives ∪ exact-dup star edges, all verified. */
-  def dedupEdges(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val (reps, star) = exactCollapse(df, idCol, textCol)
-    val sh = shingleTable(reps, "id", "text").localCheckpoint(false)
-    val cand = candidatePairs(bands(signaturesFromText(reps, "id", "text")))
-    verifyPairs(cand, sh).select(col("a"), col("b"))
-      .unionByName(star)
   }
 }

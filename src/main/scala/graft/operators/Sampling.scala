@@ -142,8 +142,10 @@ object Sampling {
       .agg(count(lit(1)).as("_c"))
     val wB = Window.partitionBy("_st").orderBy("_bkt")
       .rowsBetween(Window.unboundedPreceding, -1)
+    // histogram reused for boundary AND rank offsets, which two concurrent
+    // stages read: an eager checkpoint is computed once, a lazy one by each
     val cum = hist.withColumn("_cumBefore", coalesce(sum("_c").over(wB), lit(0L)))
-      .localCheckpoint(false) // histogram reused for boundary AND rank offsets
+      .localCheckpoint()
     val boundary = cum
       .where(col("_cumBefore") < k && col("_cumBefore") + col("_c") >= k)
       .select(col("_st"), col("_bkt").as("_bb"),
@@ -157,13 +159,14 @@ object Sampling {
     // legitimate group for groupBy and window partitioning, and an
     // equality join would silently drop its rows from the output — a
     // divergence from the window formulation (review finding)
+    // `_need` rides the grouping (one value per stratum), so `boundary` is
+    // read by this join alone: a lazy checkpoint that two concurrent joins
+    // read is computed twice
     val thr = keyed
       .join(broadcast(boundary),
         col(stratumCol) <=> boundary("_st") && col("_bkt") === col("_bb"))
-      .groupBy(col("_st"), col("_sk")).agg(count(lit(1)).as("_kc"))
+      .groupBy(col("_st"), col("_need"), col("_sk")).agg(count(lit(1)).as("_kc"))
       .withColumn("_cb", coalesce(sum("_kc").over(wK), lit(0L)))
-      .join(broadcast(boundary.select(col("_st").as("_st2"), col("_need"))),
-        col("_st") <=> col("_st2"))
       .where(col("_cb") < col("_need") && col("_cb") + col("_kc") >= col("_need"))
       .select(col("_st"), col("_sk").as("_T"), (col("_need") - col("_cb")).as("_nT"))
 

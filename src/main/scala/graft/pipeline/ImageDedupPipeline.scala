@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.config.GoldenConfig._
@@ -140,7 +140,7 @@ object ImageDedupPipeline {
     * cross blocking; per-side cids are not comparable). Hash collisions can
     * only ADD a candidate pair — every pair is re-verified by the full
     * ladder, so the verified output is unchanged (FP-safe, never FN). */
-  private[pipeline] def phashChunks(reps: DataFrame, group: org.apache.spark.sql.Column): DataFrame = {
+  private[pipeline] def phashChunks(reps: DataFrame, group: Column): DataFrame = {
     val chunkBits = PhashBits / HammingChunks
     val mask = (1L << chunkBits) - 1L
     reps
@@ -295,17 +295,25 @@ object ImageDedupPipeline {
     *    shuffles the caption STRING. The standalone image-only operator
     *    remains SimHashNearDup. */
   private[pipeline] def candidates(annotated: DataFrame, ckpt: StageStore): (DataFrame, DataFrame) = {
-    val capReps = capRepsOf(annotated)
-    def scheme(code: Int, buckets: DataFrame) = buckets.select(lit(code).as("scheme"),
-      col("bucket"), struct(lit(code).as("scheme"), col("id")).as("sid"))
     val pairs = ckpt.stage("s3_candidate_pairs") {
-      val buckets = scheme(LshScheme, foldedBands(capReps))
-        .unionByName(scheme(LGramScheme, gramsOf(capReps)))
-        .unionByName(scheme(PhashScheme, phashChunks(repsOf(annotated), col("cid"))))
-      SkewSalting.selfJoinPairs(buckets, Seq("scheme", "bucket"), "sid", SaltCap, SaltFanout)
+      SkewSalting.selfJoinPairs(blockingKeys(annotated, col("cid")),
+          Seq("scheme", "bucket"), "sid", SaltCap, SaltFanout)
         .select(col("a.scheme").as("scheme"), col("a.id").as("a"), col("b.id").as("b"))
     }
     (pairs.where(col("scheme") =!= PhashScheme).select("a", "b"),
       pairs.where(col("scheme") === PhashScheme).select("a", "b"))
+  }
+
+  /** The blocking-key table of one annotated table, the rows every scheme
+    * blocks on: (scheme, bucket, sid = (scheme, id)), with caption ids for
+    * LSH and L-gram and rep row ids for phash, whose chunk buckets lie
+    * within caption groups keyed by `group` (see [[phashChunks]]). */
+  private[pipeline] def blockingKeys(annotated: DataFrame, group: Column): DataFrame = {
+    val capReps = capRepsOf(annotated)
+    def scheme(code: Int, buckets: DataFrame) = buckets.select(lit(code).as("scheme"),
+      col("bucket"), struct(lit(code).as("scheme"), col("id")).as("sid"))
+    scheme(LshScheme, foldedBands(capReps))
+      .unionByName(scheme(LGramScheme, gramsOf(capReps)))
+      .unionByName(scheme(PhashScheme, phashChunks(repsOf(annotated), group)))
   }
 }

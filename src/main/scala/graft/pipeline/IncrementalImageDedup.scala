@@ -14,7 +14,7 @@ import ImageDedupPipeline.{run => _, runDirect => _, _}
   *
   * Work shape at scale (the reason this exists):
   *  - corpus-side computation is LINEAR scans only — the annotation window
-  *    pass and the shingle/band/gram/chunk tables. All of them are staged
+  *    pass and the shingle and blocking-key tables. All of them are staged
   *    through the [[StageStore]] under corpus-keyed names, so with a durable
   *    store (parquet dir / Iceberg catalog) they are computed once and
   *    REUSED by every subsequent import of the same corpus snapshot; a
@@ -50,8 +50,7 @@ object IncrementalImageDedup {
   /** Delta-artifact stage name for the rows generation `gen` added. */
   private def deltaName(base: String, gen: Int): String = s"${base}_d$gen"
 
-  private val artifactBases = Seq("inc_corpus_annotated", "inc_corpus_shingles",
-    "inc_corpus_bands", "inc_corpus_grams", "inc_corpus_phchunks")
+  private val artifactBases = Seq("inc_corpus_annotated", "inc_corpus_shingles", "inc_corpus_keys")
 
   /** Latest absorbed corpus generation present in the store (0 = none).
     * Each absorb commits a one-row `inc_corpus_gen_g<N>` marker LAST — the
@@ -67,10 +66,9 @@ object IncrementalImageDedup {
     * artifact is staged (0 = the un-suffixed name or, for the annotated/
     * shingle tables, the initial full-pipeline aliases). None = nothing
     * staged yet (only legal before the first import stages gen 0). */
-  private def fullBaseGen(ckpt: StageStore, base: String, gen: Int,
-                          g0Alias: Option[String]): Option[Int] =
+  private def fullBaseGen(ckpt: StageStore, base: String, gen: Int): Option[Int] =
     (gen to 1 by -1).find(b => ckpt.isDone(corpusName(base, b)))
-      .orElse(if (ckpt.isDone(base) || g0Alias.exists(ckpt.isDone)) Some(0) else None)
+      .orElse(if (ckpt.isDone(g0AliasOf(ckpt, base))) Some(0) else None)
 
   private def served(ckpt: StageStore, name: String): DataFrame =
     ckpt.stage(name)(sys.error(s"unreachable: '$name' probed done"))
@@ -81,16 +79,12 @@ object IncrementalImageDedup {
     * the base is written once (initial import or an explicit compaction)
     * and each day's absorb only appends its delta rows as a new `_d<N>`
     * stage — at 10^12-corpus scale the daily loop never rewrites the
-    * corpus-sized band/gram tables (round-4 verdict "What's wrong #2"). */
-  private def corpusArtifactAt(ckpt: StageStore, base: String, gen: Int,
-                               g0Alias: Option[String] = None): DataFrame = {
-    val fb = fullBaseGen(ckpt, base, gen, g0Alias).getOrElse(
+    * corpus-sized key tables (round-4 verdict "What's wrong #2"). */
+  private def corpusArtifactAt(ckpt: StageStore, base: String, gen: Int): DataFrame = {
+    val fb = fullBaseGen(ckpt, base, gen).getOrElse(
       sys.error(s"no staged corpus artifact '$base' (any generation ≤ $gen) " +
         "in this store — run an import first"))
-    val baseDf =
-      if (fb == 0 && !ckpt.isDone(base) && g0Alias.exists(ckpt.isDone))
-        served(ckpt, g0Alias.get)
-      else served(ckpt, corpusName(base, fb))
+    val baseDf = served(ckpt, if (fb == 0) g0AliasOf(ckpt, base) else corpusName(base, fb))
     // every generation above the chosen base must be a delta staging:
     // fullBaseGen picked the HIGHEST full artifact, so a missing delta
     // above it means the store is corrupt — fail loudly, never serve a
@@ -104,11 +98,11 @@ object IncrementalImageDedup {
     }
   }
 
-  /** The current (latest-generation) folded corpus band snapshot — what
+  /** The current (latest-generation) corpus blocking-key snapshot — what
     * [[absorb]] extends, resolved across absorb generations. Fails loudly
-    * if no import has staged corpus bands in this store yet. */
-  def corpusBands(ckpt: StageStore): DataFrame =
-    corpusArtifactAt(ckpt, "inc_corpus_bands", latestGen(ckpt))
+    * if no import has staged corpus keys in this store yet. */
+  def corpusKeys(ckpt: StageStore): DataFrame =
+    corpusArtifactAt(ckpt, "inc_corpus_keys", latestGen(ckpt))
 
   /** Rewrite the union-on-read artifact chain (full base + absorbed delta
     * stages) as ONE full artifact set at the current generation — the
@@ -125,21 +119,24 @@ object IncrementalImageDedup {
     val latest = latestGen(ckpt)
     if (latest > 0) {
       artifactBases.foreach { base =>
-        val alias = g0AliasOf(ckpt, base)
-        ckpt.stage(corpusName(base, latest))(
-          corpusArtifactAt(ckpt, base, latest, alias))
+        ckpt.stage(corpusName(base, latest))(corpusArtifactAt(ckpt, base, latest))
       }
     }
     latest
   }
 
-  /** The initial full-pipeline snapshot that can stand in for a gen-0
-    * corpus artifact (see run(): a store populated by ImageDedupPipeline
-    * serves its s1/s2 snapshots instead of duplicating them). */
-  private def g0AliasOf(ckpt: StageStore, base: String): Option[String] = base match {
-    case "inc_corpus_annotated" if !ckpt.isDone(base) => Some("s1_annotated")
-    case "inc_corpus_shingles" if !ckpt.isDone(base)  => Some("s2_shingles")
-    case _                                            => None
+  /** The stage that holds gen-0 corpus artifact `base`: the initial
+    * full-pipeline snapshot that stands in for it, if `base` itself is not
+    * staged and the snapshot is (see run(): a store populated by
+    * ImageDedupPipeline serves its s1/s2 snapshots instead of duplicating
+    * them), else `base`. */
+  private def g0AliasOf(ckpt: StageStore, base: String): String = {
+    val alias = base match {
+      case "inc_corpus_annotated" => "s1_annotated"
+      case "inc_corpus_shingles"  => "s2_shingles"
+      case _                      => base
+    }
+    if (!ckpt.isDone(base) && ckpt.isDone(alias)) alias else base
   }
 
   /** Drop superseded corpus-artifact stagings — the storage-hygiene step
@@ -159,11 +156,11 @@ object IncrementalImageDedup {
     // base generation (corpusArtifactAt), so after a compaction that
     // crashed mid-way (some bases re-based at N, others not) the
     // not-yet-compacted bases' delta stages are still live and must
-    // survive — a single bands-derived cutoff would drop them and corrupt
+    // survive — a single keys-derived cutoff would drop them and corrupt
     // the store (review finding). The src intent rows are shared across
     // bases, so they are reclaimable only below the MINIMUM base.
     val perBase = artifactBases.map { base =>
-      base -> fullBaseGen(ckpt, base, latest, g0AliasOf(ckpt, base)).getOrElse(0)
+      base -> fullBaseGen(ckpt, base, latest).getOrElse(0)
     }
     val minBase = perBase.map(_._2).min
     val fullSuperseded = perBase.flatMap { case (base, bg) =>
@@ -241,9 +238,7 @@ object IncrementalImageDedup {
     // later generation exists because an absorb extended staged artifacts.
     val freshCorpusStaging = gen == 0 && !Seq(
       "s1_annotated", "s2_shingles",
-      "inc_corpus_annotated", "inc_corpus_shingles",
-      "inc_corpus_bands", "inc_corpus_grams",
-      "inc_corpus_phchunks").exists(ckpt.isDone)
+      "inc_corpus_annotated", "inc_corpus_shingles", "inc_corpus_keys").exists(ckpt.isDone)
     if (fingerprintCheck && ckpt.isDone(fpName)) {
       val st = ckpt.stage(fpName)(sys.error("unreachable: completed stage")).head()
       val (c, x) = fingerprint(corpus)
@@ -263,56 +258,46 @@ object IncrementalImageDedup {
     // maintains them) and resolve union-on-read as full base + absorbed
     // delta stages — a warm import never re-annotates or re-hashes the
     // corpus. ----
-    def corpusArtifact(base: String, g0Alias: Option[String])
-                      (compute: => DataFrame): DataFrame =
-      if (gen == 0) {
-        if (!ckpt.isDone(base) && g0Alias.exists(ckpt.isDone))
-          ckpt.stage(g0Alias.get)(compute)
-        else ckpt.stage(base)(compute)
-      } else corpusArtifactAt(ckpt, base, gen, g0Alias)
+    def corpusArtifact(base: String)(compute: => DataFrame): DataFrame =
+      if (gen == 0) ckpt.stage(g0AliasOf(ckpt, base))(compute)
+      else corpusArtifactAt(ckpt, base, gen)
 
-    val annC = corpusArtifact("inc_corpus_annotated", Some("s1_annotated"))(annotate(corpus))
+    val annC = corpusArtifact("inc_corpus_annotated")(annotate(corpus))
     val annD = imp.stage("inc_delta_annotated")(annotate(delta))
     val (repsC, repsD) = (repsOf(annC), repsOf(annD))
-    val (capRepsC, capRepsD) = (capRepsOf(annC), capRepsOf(annD))
     val (memberC, memberD) = (membersOf(annC), membersOf(annD))
 
-    val shC = corpusArtifact("inc_corpus_shingles", Some("s2_shingles"))(shingleGramTable(capRepsC))
-    val shD = imp.stage("inc_delta_shingles")(shingleGramTable(capRepsD))
+    val shC = corpusArtifact("inc_corpus_shingles")(shingleGramTable(capRepsOf(annC)))
+    val shD = imp.stage("inc_delta_shingles")(shingleGramTable(capRepsOf(annD)))
 
-    // ---- corpus-side signature tables (LSH bands, L-gram hashes, phash
-    // chunks), the cross leg's left sides. They are the heavy linear
-    // CPU of an import — staged under corpus-keyed names so a warm import
-    // re-reads columnar snapshots instead of re-hashing the corpus.
-    // Corpus bands are staged pre-FOLDED to (bucket, id) — two longs per
-    // row instead of three; this snapshot is the largest thing a warm
-    // import reads (32 band rows per caption), so a third off its width is
-    // a third off the import's dominant scan. ----
-    val bandC = corpusArtifact("inc_corpus_bands", None)(foldedBands(capRepsC))
-    val gramC = corpusArtifact("inc_corpus_grams", None)(gramsOf(capRepsC))
-    val chunkC = corpusArtifact("inc_corpus_phchunks", None)(phashChunks(repsC, col("caption")))
+    // ---- corpus-side blocking keys (folded LSH bands, L-gram hashes,
+    // phash chunks: the full run's (scheme, bucket, sid) table), the cross
+    // leg's left side. They are the heavy linear CPU of an import — staged
+    // under a corpus-keyed name so a warm import re-reads a columnar
+    // snapshot instead of re-hashing the corpus. Phash chunks are keyed on
+    // the caption STRING hash: per-side cids are not comparable. ----
+    val keysC = corpusArtifact("inc_corpus_keys")(blockingKeys(annC, col("caption")))
 
     // Record the fingerprint ONLY when this very run staged every corpus
     // artifact (freshCorpusStaging — implies generation 0) into a durable
-    // store (bands isDone after staging) — a store holding artifacts of
+    // store (keys isDone after staging) — a store holding artifacts of
     // unknown provenance (a crash between artifact and fingerprint
     // commits) must stay unverified forever rather than be certified
     // against whatever corpus happens to be passed next (review finding).
-    if (freshCorpusStaging && ckpt.isDone("inc_corpus_bands") && !ckpt.isDone(fpName))
+    if (freshCorpusStaging && ckpt.isDone("inc_corpus_keys") && !ckpt.isDone(fpName))
       stageFingerprint(spark, ckpt, fpName, fingerprint(corpus))
 
-    // ---- corpus×delta candidates: caption-id pairs (a = corpus cid,
-    // b = delta cid) from the band and L-gram joins, and rep row pairs
-    // from the phash chunk join, which keys on the caption STRING hash
-    // (per-side cids are not comparable) and so pairs one caption's rows.
-    val capCross = imp.stage("inc_cap_cross_pairs") {
-      SkewSalting.crossJoinPairs(bandC, foldedBands(capRepsD),
-          Seq("bucket"), "id", SaltCap, SaltFanout)
-        .unionByName(SkewSalting.crossJoinPairs(gramC, gramsOf(capRepsD),
-          Seq("bucket"), "id", SaltCap, SaltFanout))
+    // ---- corpus×delta candidates: one salted cross join over key
+    // (scheme, bucket), as stage s3 joins the full run's keys with
+    // themselves: caption-id pairs (a = corpus cid, b = delta cid) of the
+    // LSH and L-gram schemes, rep row pairs of the phash scheme
+    val cross = imp.stage("inc_cross_pairs") {
+      SkewSalting.crossJoinPairs(keysC, blockingKeys(annD, col("caption")),
+          Seq("scheme", "bucket"), "sid", SaltCap, SaltFanout)
+        .select(col("a.scheme").as("scheme"), col("a.id").as("a"), col("b.id").as("b"))
     }
-    val phCross = SkewSalting.crossJoinPairs(chunkC, phashChunks(repsD, col("caption")),
-        Seq("bucket"), "id", SaltCap, SaltFanout)
+    val capCross = cross.where(col("scheme") =!= PhashScheme).select("a", "b")
+    val phCross = cross.where(col("scheme") === PhashScheme)
       .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
     // ---- delta×delta candidates: the full run's stage s3, on the delta
     val (capSelfD, sameSelfD) = candidates(annD, imp)
@@ -376,7 +361,7 @@ object IncrementalImageDedup {
     * the daily-ingest loop's missing piece (round-3 verdict "missing #4"):
     * after the caller appends the delta to its corpus table (an Iceberg
     * append in production), `absorb(importId)` stages the delta's
-    * annotation/shingle/band/gram/chunk rows as generation gen+1 DELTA
+    * annotation, shingle and blocking-key rows as generation gen+1 DELTA
     * stages (`inc_corpus_*_d<N>`) and composes the corpus fingerprint, so
     * the NEXT import (passing the grown corpus) starts warm. Work AND IO
     * are delta-sized: the corpus-sized artifact tables are never re-read
@@ -435,8 +420,8 @@ object IncrementalImageDedup {
     val shD = done(s"${importId}_inc_delta_shingles")
 
     // the store must hold corpus artifacts to absorb into
-    require(fullBaseGen(ckpt, "inc_corpus_bands", gen, None).isDefined,
-      s"absorb('$importId'): no staged corpus band artifacts in this store — " +
+    require(fullBaseGen(ckpt, "inc_corpus_keys", gen).isDefined,
+      s"absorb('$importId'): no staged corpus blocking keys in this store — " +
         "run an import against it first")
 
     val next = gen + 1
@@ -451,9 +436,7 @@ object IncrementalImageDedup {
 
     // delta contributions recomputed from the staged delta annotation —
     // delta-sized work only, staged as delta-only artifacts
-    ckpt.stage(deltaName("inc_corpus_bands", next))(foldedBands(capRepsOf(annD)))
-    ckpt.stage(deltaName("inc_corpus_grams", next))(gramsOf(capRepsOf(annD)))
-    ckpt.stage(deltaName("inc_corpus_phchunks", next))(phashChunks(repsOf(annD), col("caption")))
+    ckpt.stage(deltaName("inc_corpus_keys", next))(blockingKeys(annD, col("caption")))
     ckpt.stage(deltaName("inc_corpus_shingles", next))(shD)
     ckpt.stage(deltaName("inc_corpus_annotated", next))(annD)
     // fingerprint composes (disjoint-id contract): no corpus scan

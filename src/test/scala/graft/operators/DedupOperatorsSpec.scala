@@ -25,23 +25,6 @@ class DedupOperatorsSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     (4L, "tiny doc") // < k tokens → no shingles
   ).toDF("doc_id", "text")
 
-  "MinHashLsh.dedupEdges" should "find near-dups and exact dups, skip unrelated" in {
-    val edges = MinHashLsh.dedupEdges(docsDf, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    edges should contain((0L, 1L)) // near-dup via LSH + verify
-    edges should contain((0L, 3L)) // exact dup via star edge
-    edges.flatMap(e => Set(e._1, e._2)) should not contain 2L
-    edges.flatMap(e => Set(e._1, e._2)) should not contain 4L
-  }
-
-  it should "produce clusters with min-id semantics end to end" in {
-    val edges = MinHashLsh.dedupEdges(docsDf, "doc_id", "text")
-    val clusters = ConnectedComponents.run(spark, edges,
-      Some(docsDf.select(col("doc_id").as("id"))))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    clusters shouldBe Map(0L -> 0L, 1L -> 0L, 2L -> 2L, 3L -> 0L, 4L -> 4L)
-  }
-
   "Queries.exactDedup" should "match the min-over-window formulation, incl. a viral caption" in {
     // groupBy-min + join-back (straggler-proof) must be row-identical to
     // the reference window formulation; 1/3 of docs share one caption
@@ -215,38 +198,7 @@ class DedupOperatorsSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  "MinHashLsh.dedupEdgesAgainst" should "connect staging rows into master clusters" in {
-    // master: docsDf (base/nearDup/unrelated/exact-dup/tiny). staging: a
-    // fresh near-dup of base, an exact dup of base, an unmatched doc, and a
-    // staging-internal exact dup.
-    val staging = Seq(
-      (10L, base.replace("customer", "client")), // near-dup of master base
-      (11L, base),                               // exact dup of master base
-      (12L, "omega psi chi phi upsilon tau sigma rho pi omicron"),
-      (13L, base)                                // exact dup within staging
-    ).toDF("doc_id", "text")
-    val edges = MinHashLsh.dedupEdgesAgainst(docsDf, staging, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    edges should contain((0L, 10L)) // verified near-dup cross edge (reps)
-    edges should contain((0L, 11L)) // exact-text cross edge (reps)
-    edges should contain((11L, 13L)) // staging star edge
-    edges.flatMap(e => Set(e._1, e._2)) should not contain 12L
-    // staging ids only ever appear opposite master ids or inside staging
-    val masterIds = Set(0L, 1L, 2L, 3L, 4L)
-    all(edges.map(_._1)) should be < 14L
-    // CC over master's own edges ∪ cross edges assigns every staging row
-    val allEdges = MinHashLsh.dedupEdges(docsDf, "doc_id", "text")
-      .unionByName(edges.toSeq.toDF("a", "b"))
-    val ids = (masterIds ++ Set(10L, 11L, 12L, 13L)).toSeq.toDF("id")
-    val clusters = ConnectedComponents.run(spark, allEdges, Some(ids))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    clusters(10L) shouldBe 0L
-    clusters(11L) shouldBe 0L
-    clusters(13L) shouldBe 0L
-    clusters(12L) shouldBe 12L
-  }
-
-  it should "never shuffle singleton-bucket rows into the pair join (round-3 plan property)" in {
+  "SkewSalting.selfJoinPairs" should "never shuffle singleton-bucket rows into the pair join (round-3 plan property)" in {
     // 1.2M singleton buckets (above BloomMinSingletons, so the bloom
     // engages) + 500 buckets of 2. The round-2 formulation shuffled every
     // row ~3x (window + both self-join sides) ≈ 3.6M records; with the

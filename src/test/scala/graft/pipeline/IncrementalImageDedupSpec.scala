@@ -105,13 +105,13 @@ class IncrementalImageDedupSpec extends AnyFlatSpec with Matchers with SparkTest
     val s1 = new StageCheckpoint(spark, dir)
     val out1 = IncrementalImageDedup.run(spark, corpus, c0, d1, s1, "d1").localCheckpoint()
     out1.count()
-    val bandsGen0 = IncrementalImageDedup.corpusBands(s1).count()
+    val bandsGen0 = IncrementalImageDedup.corpusKeys(s1).count()
     IncrementalImageDedup.absorb(spark, s1, "d1") shouldBe 1
     val s2 = new StageCheckpoint(spark, dir)
     IncrementalImageDedup.latestGen(s2) shouldBe 1
     // the corpus-band view now resolves generation 1
     // and includes the absorbed delta's bands
-    IncrementalImageDedup.corpusBands(s2).count() should be > bandsGen0
+    IncrementalImageDedup.corpusKeys(s2).count() should be > bandsGen0
 
     // import 2 runs against the GROWN corpus (caller appended d1) and the
     // absorbed artifacts — and must equal one full re-run over everything
@@ -124,9 +124,9 @@ class IncrementalImageDedupSpec extends AnyFlatSpec with Matchers with SparkTest
     // absorb staged ONLY the delta's artifact rows (delta-sized IO) — no
     // rewritten full corpus table at generation 1
     s2.isDone("inc_corpus_annotated_d1") shouldBe true
-    s2.isDone("inc_corpus_bands_d1") shouldBe true
+    s2.isDone("inc_corpus_keys_d1") shouldBe true
     s2.isDone("inc_corpus_annotated_g1") shouldBe false
-    s2.isDone("inc_corpus_bands_g1") shouldBe false
+    s2.isDone("inc_corpus_keys_g1") shouldBe false
   }
 
   it should "treat a re-run of a completed absorb as a no-op (marker records the import)" in {
@@ -136,12 +136,12 @@ class IncrementalImageDedupSpec extends AnyFlatSpec with Matchers with SparkTest
     val st = new StageCheckpoint(spark, dir)
     IncrementalImageDedup.run(spark, corpus, c0, d1, st, "n1").count()
     IncrementalImageDedup.absorb(spark, st, "n1") shouldBe 1
-    val bands1 = IncrementalImageDedup.corpusBands(new StageCheckpoint(spark, dir)).count()
+    val bands1 = IncrementalImageDedup.corpusKeys(new StageCheckpoint(spark, dir)).count()
     // the retry must NOT create generation 2 with the same delta
     IncrementalImageDedup.absorb(spark, new StageCheckpoint(spark, dir), "n1") shouldBe 1
     val st2 = new StageCheckpoint(spark, dir)
     IncrementalImageDedup.latestGen(st2) shouldBe 1
-    IncrementalImageDedup.corpusBands(st2).count() shouldBe bands1
+    IncrementalImageDedup.corpusKeys(st2).count() shouldBe bands1
   }
 
   it should "complete a crashed absorb idempotently on re-run (marker commits last)" in {
@@ -151,7 +151,7 @@ class IncrementalImageDedupSpec extends AnyFlatSpec with Matchers with SparkTest
     val st = new StageCheckpoint(spark, dir)
     IncrementalImageDedup.run(spark, corpus, c0, d1, st, "c1").count()
     IncrementalImageDedup.absorb(spark, st, "c1") shouldBe 1
-    val bands1 = IncrementalImageDedup.corpusBands(new StageCheckpoint(spark, dir)).count()
+    val bands1 = IncrementalImageDedup.corpusKeys(new StageCheckpoint(spark, dir)).count()
     // simulate the crash window: every delta stage committed, marker not
     val st2 = new StageCheckpoint(spark, dir)
     st2.dropStage("inc_corpus_gen_g1")
@@ -160,7 +160,7 @@ class IncrementalImageDedupSpec extends AnyFlatSpec with Matchers with SparkTest
     IncrementalImageDedup.absorb(spark, st2, "c1") shouldBe 1
     val st3 = new StageCheckpoint(spark, dir)
     IncrementalImageDedup.latestGen(st3) shouldBe 1
-    IncrementalImageDedup.corpusBands(st3).count() shouldBe bands1
+    IncrementalImageDedup.corpusKeys(st3).count() shouldBe bands1
   }
 
   it should "refuse to absorb a different import into someone else's partial generation" in {
@@ -216,21 +216,21 @@ class IncrementalImageDedupSpec extends AnyFlatSpec with Matchers with SparkTest
     // them (only the superseded generation-0 fingerprint is reclaimable)
     val st1 = new StageCheckpoint(spark, dir)
     val dropped0 = IncrementalImageDedup.pruneGenerations(st1)
-    dropped0 should not contain "inc_corpus_bands"
-    dropped0 should not contain "inc_corpus_bands_d1"
-    val preCompact = IncrementalImageDedup.corpusBands(new StageCheckpoint(spark, dir)).count()
+    dropped0 should not contain "inc_corpus_keys"
+    dropped0 should not contain "inc_corpus_keys_d1"
+    val preCompact = IncrementalImageDedup.corpusKeys(new StageCheckpoint(spark, dir)).count()
 
     IncrementalImageDedup.compactGenerations(new StageCheckpoint(spark, dir)) shouldBe 1
     val st2 = new StageCheckpoint(spark, dir)
     val dropped = IncrementalImageDedup.pruneGenerations(st2)
-    dropped should contain("inc_corpus_bands")    // generation-0 artifacts freed
-    dropped should contain("inc_corpus_bands_d1") // folded delta stages freed
+    dropped should contain("inc_corpus_keys")    // generation-0 artifacts freed
+    dropped should contain("inc_corpus_keys_d1") // folded delta stages freed
     // the generation resolution and the current corpus view both survive
     val st3 = new StageCheckpoint(spark, dir)
     IncrementalImageDedup.latestGen(st3) shouldBe 1
-    st3.isDone("inc_corpus_bands") shouldBe false
-    st3.isDone("inc_corpus_bands_g1") shouldBe true
-    IncrementalImageDedup.corpusBands(st3).count() shouldBe preCompact
+    st3.isDone("inc_corpus_keys") shouldBe false
+    st3.isDone("inc_corpus_keys_g1") shouldBe true
+    IncrementalImageDedup.corpusKeys(st3).count() shouldBe preCompact
     // and the NEXT import runs correctly against the pruned store
     val corpus2 = corpus.unionByName(d1).localCheckpoint()
     val out2 = IncrementalImageDedup.run(spark, corpus2, out1, d2, st3, "p2")

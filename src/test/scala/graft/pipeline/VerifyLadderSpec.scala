@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.config.GoldenConfig._
 import graft.images.SyntheticImages
-import graft.operators.SkewSalting
 import ImageDedupPipeline._
 import java.nio.file.Files
 
@@ -96,11 +95,10 @@ class VerifyLadderSpec extends AnyFlatSpec with Matchers with SparkTestBase {
     val (annC, annD) = (st("inc_corpus_annotated"), st("v1_inc_delta_annotated"))
     val (memberC, memberD) = (membersOf(annC), membersOf(annD))
     val (capSelfD, sameSelfD) = schemePairs(st("v1_s3_candidate_pairs"))
-    val phCross = SkewSalting.crossJoinPairs(st("inc_corpus_phchunks"),
-        phashChunks(repsOf(annD), col("caption")), Seq("bucket"), "id", SaltCap, SaltFanout)
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-    val cand = expand(st("v1_inc_cap_cross_pairs"), memberC, memberD)
-      .unionByName(phCross)
+    val (capCross, phCross) = schemePairs(st("v1_inc_cross_pairs"))
+    val cand = expand(capCross, memberC, memberD)
+      .unionByName(phCross.select(least(col("a"), col("b")).as("a"),
+        greatest(col("a"), col("b")).as("b")))
       .unionByName(expand(capSelfD, memberD, memberD))
       .unionByName(sameSelfD)
       .dropDuplicates("a", "b")
