@@ -159,9 +159,8 @@ object Sampling {
     // legitimate group for groupBy and window partitioning, and an
     // equality join would silently drop its rows from the output — a
     // divergence from the window formulation (review finding)
-    // `_need` rides the grouping (one value per stratum), so `boundary` is
-    // read by this join alone: a lazy checkpoint that two concurrent joins
-    // read is computed twice
+    // `_need` rides the grouping (one value per stratum), so no second
+    // join of `boundary` brings it back
     val thr = keyed
       .join(broadcast(boundary),
         col(stratumCol) <=> boundary("_st") && col("_bkt") === col("_bb"))
